@@ -1069,6 +1069,16 @@ def _q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsidx.ann import lsh_bucketed_topk
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    # the twin's plane literals are drawn for LSH_ANN_DIM dimensions: any
+    # other width would hash different hyperplanes than the engine's
+    dims = emb.agg(
+        F.min(F.size("embedding")).alias("lo"), F.max(F.size("embedding")).alias("hi")
+    ).collect()[0]
+    if not dims["lo"] == dims["hi"] == LSH_ANN_DIM:
+        raise ValueError(
+            f"lsh_ann_topk expects {LSH_ANN_DIM}-dim embeddings, got "
+            f"{dims['lo']}..{dims['hi']}"
+        )
     queries_df = emb.filter(F.col("vec_id") < ANN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -1083,6 +1093,7 @@ def _q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+LSH_ANN_DIM = 64  # the embeddings table's dimension
 LSH_ANN_PLANES = 4
 LSH_ANN_TABLES = 16
 LSH_ANN_SEED = 7  # lsh_bucketed_topk's default
@@ -1096,10 +1107,9 @@ def _lsh_ann_sql() -> str:
     join on (table, bucket); survivors rescore with exact cosine."""
     from tsidx.ann import _hyperplanes
 
-    dim = 64  # the embeddings table's dimension (asserted by the entry)
     selects = []
     for t in range(LSH_ANN_TABLES):
-        planes = _hyperplanes(dim, LSH_ANN_PLANES, LSH_ANN_SEED + 1000 * t)
+        planes = _hyperplanes(LSH_ANN_DIM, LSH_ANN_PLANES, LSH_ANN_SEED + 1000 * t)
         bits = []
         for i, p in enumerate(planes):
             lits = ", ".join(repr(float(v)) for v in p)
@@ -1991,9 +2001,10 @@ def _get_champions(spark: SparkSession, sf_dir: str):
 def _q_champion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tier-1 champion-list probe (tsidx/champion.py): BM25 over each
     query term's top-m postings only, on the derived Zipf corpus. The
-    twin recomputes the same tier from the same derivation, so the entry
-    checks the operator exactly; recall vs the full index is the
-    separate champion_recall gate."""
+    twin recomputes the same tier from the same derivation, so this
+    entry checks the partial-score probe for exactness only; its recall
+    is not gated. champion_recall gates the rescored method
+    (champion_topk_rescored), not this probe."""
     from tsidx.champion import champion_topk
 
     eng = _get_zipf_engine(spark, sf_dir)

@@ -110,7 +110,6 @@ def main() -> None:
     ap.add_argument("--turns-per-conv", type=int, default=8)
     ap.add_argument("--block-size", type=int, default=1 << 16)
     ap.add_argument("--shard-size", type=int, default=None)
-    ap.add_argument("--codec", default="varbyte", choices=["varbyte", "array"])
     ap.add_argument("--resumable", action="store_true")
     ap.add_argument("--max-shards", type=int, default=None)
     ap.add_argument("--skip-unique-check", action="store_true")
@@ -143,7 +142,6 @@ def main() -> None:
             args.output,
             block_size=args.block_size,
             shard_size=args.shard_size,
-            codec=args.codec,
             check_unique=not args.skip_unique_check,
             max_shards=args.max_shards,
         )
@@ -160,7 +158,6 @@ def main() -> None:
         idx = build_index(
             transcripts,
             block_size=args.block_size,
-            codec=args.codec,
             check_unique=not args.skip_unique_check,
         )
         if args.no_write:

@@ -30,9 +30,8 @@ def _result(idx):
     return {r["check"]: r["n_bad"] for r in fsck_index(idx).collect()}
 
 
-@pytest.mark.parametrize("codec", ["varbyte", "array"])
-def test_healthy_index_all_zero(corpus, codec):
-    idx = build_index(corpus, block_size=8, codec=codec)
+def test_healthy_index_all_zero(corpus):
+    idx = build_index(corpus, block_size=8)
     got = _result(idx)
     assert set(got) >= {
         "block_id_range", "block_decode", "term_df", "doc_ids_dense",

@@ -4,9 +4,12 @@ the sandbox — proven here with json as the stand-in third format)."""
 
 from __future__ import annotations
 
+import datetime
 import glob
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tsidx.io import DEFAULT_FORMAT, read_table, table_format, write_table
@@ -98,27 +101,76 @@ def test_base_path_preserves_partition_column(spark, tmp_path):
     assert got.filter(F.col("shard") == 1).count() == 4
 
 
+def _tiny_transcripts(spark, n):
+    base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    rows = [
+        (f"c{i:03d}", 0, "user", f"hello world turn {i}", "", base)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+
+
 def test_index_read_delegates_streaming_layout(spark, tmp_path):
     """InvertedIndex.read on a streaming-built index must load via the
     shard-layout path instead of crashing on manifest/*.json (regression:
     the non-resumable branch tried spark.read.parquet on JSON markers)."""
-    import datetime
-
     from tsidx.index import InvertedIndex
     from tsidx.streaming import append_batch
 
-    base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
-    rows = [
-        (f"c{i:03d}", 0, "user", f"hello world turn {i}", "", base)
-        for i in range(32)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
     path = str(tmp_path / "sidx")
-    append_batch(df, path, 0, block_size=16)
+    append_batch(_tiny_transcripts(spark, 32), path, 0, block_size=16)
     idx = InvertedIndex.read(spark, path)
     assert idx.meta["n_docs"] == 32
     assert idx.docs.count() == 32
     assert idx.terms.filter(F.col("term") == "hello").collect()[0]["df"] == 32
+
+
+def _set_codec(record_path, codec):
+    with open(record_path) as f:
+        record = json.load(f)
+    record["codec"] = codec
+    with open(record_path, "w") as f:
+        json.dump(record, f)
+
+
+def test_index_read_rejects_foreign_codec(spark, tmp_path):
+    """An index whose meta.json names another posting codec fails at
+    read time with an error naming the codec, not deep in a decode."""
+    from tsidx.build import build_index
+    from tsidx.index import InvertedIndex
+
+    path = str(tmp_path / "idx")
+    build_index(_tiny_transcripts(spark, 24), block_size=8).write(path, num_partitions=2)
+    assert InvertedIndex.read(spark, path).meta["codec"] == "varbyte"
+    _set_codec(os.path.join(path, "meta.json"), "array")
+    with pytest.raises(ValueError, match="'array'"):
+        InvertedIndex.read(spark, path)
+
+
+def test_stream_and_resumable_reject_foreign_codec(spark, tmp_path):
+    """The streaming state, streaming meta and resumable config are
+    checked the same way before any work is done."""
+    from tsidx.index import InvertedIndex
+    from tsidx.resume import build_index_resumable, pending_shards
+    from tsidx.streaming import append_batch
+
+    df = _tiny_transcripts(spark, 24)
+    spath = str(tmp_path / "sidx")
+    append_batch(df, spath, 0, block_size=8)
+    _set_codec(os.path.join(spath, "meta.json"), "array")
+    with pytest.raises(ValueError, match="'array'"):
+        InvertedIndex.read(spark, spath)
+    _set_codec(os.path.join(spath, "stream_state.json"), "array")
+    with pytest.raises(ValueError, match="'array'"):
+        append_batch(df, spath, 1, block_size=8)
+
+    rpath = str(tmp_path / "ridx")
+    build_index_resumable(df, rpath, block_size=8, max_shards=0)
+    _set_codec(os.path.join(rpath, "config.json"), "array")
+    with pytest.raises(ValueError, match="'array'"):
+        pending_shards(rpath)
+    with pytest.raises(ValueError, match="'array'"):
+        build_index_resumable(df, rpath, block_size=8)

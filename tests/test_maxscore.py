@@ -67,19 +67,6 @@ def test_maxscore_matches_naive_and_wand(built, query):
     assert naive == ms == wd
 
 
-def test_maxscore_array_codec(spark, sonnets_transcripts, sonnets):
-    idx = build_index(sonnets_transcripts, block_size=32, codec="array")
-    oracle = OracleIndex()
-    oracle.add_corpus(sonnets)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in maxscore_topk(
-            idx, "fire heat", 10, small_candidate_limit=0
-        ).collect()
-    ]
-    assert got == oracle.bm25_topk("fire heat", 10)
-
-
 def test_maxscore_prunes_stopword_terms(spark, sonnets):
     """On a corpus where one rare term dominates and stopwords are cheap,
     the essential set must shrink below the full query — candidate blocks

@@ -29,22 +29,16 @@ def _df(spark, texts, prefix):
 def build_with_base(spark, texts, prefix, base, block_size=32):
     """Index whose docIDs start at *base* (what resume shards and streaming
     batches produce natively) — ids are final before encoding."""
-    from tsidx.build import make_fused_block_builder
+    from tsidx.build import build_postings
     from tsidx.docids import assign_doc_ids
-    from tsidx.index import POSTINGS_VARBYTE_SCHEMA, InvertedIndex
+    from tsidx.index import InvertedIndex
     from tsidx.ship import ensure_shipped
 
     ensure_shipped(spark)
     df = _df(spark, texts, prefix)
     ids, n = assign_doc_ids(df, return_count=True)
     docs = ids.withColumn("doc_id", (F.col("doc_id") + base).cast("long"))
-    postings = (
-        docs.select(
-            "doc_id", "text", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-        )
-        .groupBy("block_id")
-        .applyInPandas(make_fused_block_builder("varbyte"), POSTINGS_VARBYTE_SCHEMA)
-    )
+    postings = build_postings(docs, block_size)
     postings.persist()
     total = postings.agg(F.sum("sum_tf")).collect()[0][0] or 0
     terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))

@@ -15,12 +15,11 @@ from tsidx.query import QueryEngine
 GOLDEN_QUERIES = ["same", "thrall quench", "fire heat", "love", "zzzunknown", ""]
 
 
-@pytest.fixture(scope="module", params=["varbyte", "array"])
-def built(request, spark, sonnets_transcripts):
+@pytest.fixture(scope="module")
+def built(spark, sonnets_transcripts):
     idx = build_index(
         sonnets_transcripts,
         block_size=64,  # small blocks: force multi-block terms at 154 docs
-        codec=request.param,
         num_partitions=4,
     )
     return idx

@@ -52,14 +52,6 @@ def test_wand_matches_naive_plan(built, query):
     assert naive == wand
 
 
-def test_wand_array_codec(spark, sonnets_transcripts, sonnets):
-    idx = build_index(sonnets_transcripts, block_size=32, codec="array")
-    oracle = OracleIndex()
-    oracle.add_corpus(sonnets)
-    got = [(r["doc_id"], r["score"]) for r in wand_topk(idx, "fire heat", 10).collect()]
-    assert got == oracle.bm25_topk("fire heat", 10)
-
-
 def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     """Survivor selection must stay a DataFrame plan: with >= 10^4 posting
     blocks, no single driver collect during wand_topk may return more than

@@ -47,7 +47,7 @@ def main():
     espec.loader.exec_module(se)
     df = se.entry(spark)
     rows = df.collect()
-    assert len(rows) >= 0
+    assert len(rows) > 0, "entry() returned no rows"
     print(f"[2/4] entry() smoke OK: {len(rows)} rows,"
           f" schema {df.schema.simpleString()}")
 

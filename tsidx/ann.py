@@ -765,7 +765,12 @@ def mmr_rerank(
         )
         remaining[pick] = False
         selected.append(pick)
-        pair = np.round(unit @ unit[pick], 9)  # see rounding note above
+        # see rounding note above. np.round (here and on sims) rounds half
+        # to even, the DuckDB twin's round() half away from zero: a sim
+        # landing exactly on a 5e-10 boundary rounds differently and can
+        # flip an argmax. Agreement is verified per corpus, so check this
+        # first when a new corpus mismatches.
+        pair = np.round(unit @ unit[pick], 9)
         max_sim_to_sel = np.maximum(max_sim_to_sel, pair)
     return spark.createDataFrame(out, out_schema)
 

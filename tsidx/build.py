@@ -41,19 +41,15 @@ from pyspark.sql import functions as F
 
 from tsidx.compress import encode_posting_block
 from tsidx.docids import assign_doc_ids, check_unique_keys
-from tsidx.index import (
-    POSTINGS_ARRAY_SCHEMA,
-    POSTINGS_VARBYTE_SCHEMA,
-    InvertedIndex,
-)
+from tsidx.index import POSTINGS_CODEC, POSTINGS_VARBYTE_SCHEMA, InvertedIndex
 from tsidx.oracle import B, K1
 from tsidx.ship import ensure_shipped
 from tsidx.tokenize import TOKENS_SCHEMA, tokenize_map_in_pandas
 
 __all__ = [
     "build_index",
+    "build_postings",
     "postings_from_tokens",
-    "make_fused_block_builder",
     "DEFAULT_BLOCK_SIZE",
 ]
 
@@ -61,16 +57,17 @@ DEFAULT_BLOCK_SIZE = 1 << 20
 
 
 def _encode_blocks(batches):
-    """Arrow-batched varbyte encoder: array plist -> binary streams."""
+    """Arrow-batched varbyte encoder: sorted (doc_id, tf, dl) struct arrays
+    -> binary streams."""
     import numpy as np
     import pandas as pd
 
     for pdf in batches:
         gaps_col, tfs_col, dls_col = [], [], []
-        for plist in pdf["plist"]:
-            doc_ids = np.fromiter((p["doc_id"] for p in plist), dtype=np.uint64)
-            tfs = np.fromiter((p["tf"] for p in plist), dtype=np.uint64)
-            dls = np.fromiter((p["dl"] for p in plist), dtype=np.uint64)
+        for posts in pdf["posts"]:
+            doc_ids = np.fromiter((p["doc_id"] for p in posts), dtype=np.uint64)
+            tfs = np.fromiter((p["tf"] for p in posts), dtype=np.uint64)
+            dls = np.fromiter((p["dl"] for p in posts), dtype=np.uint64)
             g, t, d = encode_posting_block(doc_ids, tfs, dls)
             gaps_col.append(g)
             tfs_col.append(t)
@@ -92,7 +89,7 @@ def _encode_blocks(batches):
         )
 
 
-def make_fused_block_builder(codec: str):
+def _make_fused_block_builder():
     """applyInPandas factory: one group = one block's docs (doc_id, text)
     -> that block's complete posting rows.
 
@@ -136,15 +133,9 @@ def make_fused_block_builder(codec: str):
                 "max_tf": pd.Series(dtype="int32"),
                 "min_dl": pd.Series(dtype="int32"),
                 "sum_tf": pd.Series(dtype="int64"),
-                **(
-                    {"plist": pd.Series(dtype=object)}
-                    if codec == "array"
-                    else {
-                        "doc_gaps": pd.Series(dtype=object),
-                        "tfs": pd.Series(dtype=object),
-                        "dls": pd.Series(dtype=object),
-                    }
-                ),
+                "doc_gaps": pd.Series(dtype=object),
+                "tfs": pd.Series(dtype=object),
+                "dls": pd.Series(dtype=object),
             }
         )
         if n_tok == 0:
@@ -193,17 +184,6 @@ def make_fused_block_builder(codec: str):
             "min_dl": np.minimum.reduceat(post_dls, starts).astype(np.int32),
             "sum_tf": np.add.reduceat(tf, starts).astype(np.int64),
         }
-        if codec == "array":
-            plists = [
-                [
-                    {"doc_id": int(d), "tf": int(t), "dl": int(l)}
-                    for d, t, l in zip(
-                        post_docs[s:e], tf[s:e], post_dls[s:e]
-                    )
-                ]
-                for s, e in zip(starts, ends)
-            ]
-            return pd.DataFrame({**out, "plist": plists})
         gaps_col, tfs_col, dls_col = [], [], []
         for s, e in zip(starts, ends):
             g, tb, lb = encode_posting_block(
@@ -220,9 +200,31 @@ def make_fused_block_builder(codec: str):
     return build_block
 
 
-def postings_from_tokens(
-    tokens: DataFrame, block_size: int, codec: str
+def build_postings(
+    docs: DataFrame, block_size: int, *, blocks: DataFrame | None = None
 ) -> DataFrame:
+    """(doc_id, text) docs -> posting-block rows via the fused builder:
+    tag each doc with ``block_id = doc_id DIV block_size``, shuffle the
+    raw docs by that uniform key, and encode each block in one Arrow pass.
+
+    The single encode side of the posting format: the one-shot build,
+    streaming appends, resumable shards and in-place updates all call
+    this, so a block is byte-identical whichever path wrote it. *blocks*,
+    a ``block_id`` DataFrame, restricts the build to those blocks (a
+    semi-join ahead of the shuffle; AQE broadcasts it while small and
+    shuffle-joins it when large).
+    """
+    blocked = docs.select(
+        "doc_id", "text", F.expr(f"doc_id DIV {int(block_size)}").alias("block_id")
+    )
+    if blocks is not None:
+        blocked = blocked.join(blocks, "block_id", "semi")
+    return blocked.groupBy("block_id").applyInPandas(
+        _make_fused_block_builder(), schema=POSTINGS_VARBYTE_SCHEMA
+    )
+
+
+def postings_from_tokens(tokens: DataFrame, block_size: int) -> DataFrame:
     """(doc_id, term, tf, dl) rows -> posting-block rows.
 
     The ``doc_id // block_size`` grouping is simultaneously the row-size cap,
@@ -234,7 +236,7 @@ def postings_from_tokens(
         tokens.withColumn("block_id", F.expr(f"doc_id DIV {int(block_size)}"))
         .groupBy("term", "block_id")
         .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("plist"),
+            F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("posts"),
             F.count("*").alias("block_df"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
@@ -243,12 +245,7 @@ def postings_from_tokens(
             F.sum(F.col("tf").cast("long")).alias("sum_tf"),
         )
     )
-    if codec == "varbyte":
-        return blocks.mapInPandas(_encode_blocks, schema=POSTINGS_VARBYTE_SCHEMA)
-    return blocks.select(
-        "term", "block_id", "block_df", "min_doc", "max_doc", "max_tf", "min_dl",
-        "sum_tf", "plist",
-    )
+    return blocks.mapInPandas(_encode_blocks, schema=POSTINGS_VARBYTE_SCHEMA)
 
 
 def build_index(
@@ -256,7 +253,6 @@ def build_index(
     *,
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     block_size: int = DEFAULT_BLOCK_SIZE,
-    codec: str = "varbyte",
     docid_method: str = "conv_offset",
     num_partitions: int | None = None,
     check_unique: bool = True,
@@ -283,7 +279,7 @@ def build_index(
     ``strategy``:
 
     - ``fused`` (default): shuffle raw docs by ``block_id`` and build each
-      block's postings in one Arrow pass (`make_fused_block_builder`) —
+      block's postings in one Arrow pass (`build_postings`) —
       smallest shuffle, no hot-term skew, best parallelism.
     - ``explode``: classic exploded-token path (tokenize -> shuffle
       (doc, term) rows -> groupBy(term, block)); kept as the
@@ -301,8 +297,6 @@ def build_index(
                   file=sys.stderr, flush=True)
         return time.time()
 
-    if codec not in ("varbyte", "array"):
-        raise ValueError(f"unknown codec: {codec}")
     if strategy not in ("fused", "explode"):
         raise ValueError(f"unknown strategy: {strategy}")
     ensure_shipped(transcripts.sparkSession)
@@ -325,21 +319,12 @@ def build_index(
     t = _mark("assign_doc_ids", t)
 
     if strategy == "fused":
-        schema = (
-            POSTINGS_VARBYTE_SCHEMA if codec == "varbyte" else POSTINGS_ARRAY_SCHEMA
-        )
-        postings = (
-            docs.select(
-                "doc_id", "text", F.expr(f"doc_id DIV {int(block_size)}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .applyInPandas(make_fused_block_builder(codec), schema=schema)
-        )
+        postings = build_postings(docs, block_size)
     else:
         tokens = docs.select("doc_id", "text").mapInPandas(
             tokenize_map_in_pandas(), schema=TOKENS_SCHEMA
         )
-        postings = postings_from_tokens(tokens, block_size, codec)
+        postings = postings_from_tokens(tokens, block_size)
     postings.persist(StorageLevel.MEMORY_AND_DISK)
 
     agg = postings.agg(
@@ -357,7 +342,7 @@ def build_index(
         "k1": k1,
         "b": b,
         "block_size": int(block_size),
-        "codec": codec,
+        "codec": POSTINGS_CODEC,
         "order_cols": list(order_cols),
         # no wall-clock fields: index content and metadata are pure functions
         # of the input table (SURVEY §7.2 determinism bans)

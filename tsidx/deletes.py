@@ -123,8 +123,6 @@ def apply_deletes(index: InvertedIndex) -> InvertedIndex:
     """
     if index.tombstones is None:
         return index
-    if index.meta.get("codec") != "varbyte":
-        raise NotImplementedError("apply_deletes requires the varbyte codec")
     from tsidx.ship import ensure_shipped
 
     ensure_shipped(index.docs.sparkSession)

@@ -31,8 +31,7 @@ Checks (one output row each, ``(check, n_bad)``):
                           (skipped when the index has no manifest).
 
 All checks are distributed aggregations; the only driver-side values are
-the per-check bad counts. Runs on either postings codec (varbyte or
-array).
+the per-check bad counts.
 """
 
 from __future__ import annotations
@@ -72,29 +71,6 @@ def _decode_check(batches):
         yield pd.DataFrame({"n_bad": [bad]})
 
 
-def _array_check(postings: DataFrame) -> DataFrame:
-    """JVM-side twin of the decode check for the uncompressed array codec."""
-    p = postings.select(
-        "block_df", "min_doc", "max_doc", "max_tf", "min_dl", "sum_tf",
-        "plist",
-    )
-    ids = F.transform("plist", lambda s: s["doc_id"])
-    tfs = F.transform("plist", lambda s: s["tf"])
-    bad = ~(
-        (F.size("plist") == F.col("block_df"))
-        & (F.element_at(ids, 1) == F.col("min_doc"))
-        & (F.element_at(ids, -1) == F.col("max_doc"))
-        & (F.array_max(tfs) == F.col("max_tf"))
-        & (F.array_min(F.transform("plist", lambda s: s["dl"])) == F.col("min_dl"))
-        & (F.aggregate(tfs, F.lit(0).cast("long"), lambda a, x: a + x) == F.col("sum_tf"))
-        & F.forall(
-            F.zip_with(ids, F.slice(ids, 2, 2_147_483_647), lambda a, b: b > a),
-            lambda x: x,
-        )
-    )
-    return p.select(F.when(bad, 1).otherwise(0).alias("n_bad"))
-
-
 def fsck_index(index: InvertedIndex) -> DataFrame:
     """Run every integrity check; returns ``(check string, n_bad long)``
     rows — all zeros on a healthy index."""
@@ -112,13 +88,10 @@ def fsck_index(index: InvertedIndex) -> DataFrame:
     ).count()
     checks.append(("block_id_range", range_bad))
 
-    if meta["codec"] == "varbyte":
-        decoded = index.postings.select(
-            "block_df", "min_doc", "max_doc", "max_tf", "min_dl", "sum_tf",
-            "doc_gaps", "tfs", "dls",
-        ).mapInPandas(_decode_check, schema="n_bad long")
-    else:
-        decoded = _array_check(index.postings)
+    decoded = index.postings.select(
+        "block_df", "min_doc", "max_doc", "max_tf", "min_dl", "sum_tf",
+        "doc_gaps", "tfs", "dls",
+    ).mapInPandas(_decode_check, schema="n_bad long")
     decode_bad = decoded.agg(F.sum("n_bad")).collect()[0][0] or 0
     checks.append(("block_decode", int(decode_bad)))
 

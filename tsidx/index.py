@@ -40,20 +40,34 @@ __all__ = [
     "InvertedIndex",
     "merge_indexes",
     "diff_indexes",
-    "POSTINGS_ARRAY_SCHEMA",
+    "check_codec",
+    "POSTINGS_CODEC",
     "POSTINGS_VARBYTE_SCHEMA",
 ]
 
-POSTINGS_ARRAY_SCHEMA = (
-    "term string, block_id long, block_df long, min_doc long, max_doc long, "
-    "max_tf int, min_dl int, sum_tf long, "
-    "plist array<struct<doc_id: long, tf: int, dl: int>>"
-)
+# The one posting format: delta + varbyte streams (tsidx.compress). Every
+# writer records it as ``codec`` in meta.json / stream_state.json /
+# config.json, and every reader checks it with :func:`check_codec`.
+POSTINGS_CODEC = "varbyte"
 
 POSTINGS_VARBYTE_SCHEMA = (
     "term string, block_id long, block_df long, min_doc long, max_doc long, "
     "max_tf int, min_dl int, sum_tf long, doc_gaps binary, tfs binary, dls binary"
 )
+
+
+def check_codec(record: dict, source: str) -> dict:
+    """Fail fast on an index written in a foreign posting format: raise
+    ``ValueError`` naming the codec when *record* (a loaded meta.json,
+    stream_state.json or config.json, named by *source*) says anything
+    other than ``varbyte``. Returns *record* unchanged."""
+    codec = record.get("codec", POSTINGS_CODEC)
+    if codec != POSTINGS_CODEC:
+        raise ValueError(
+            f"{source}: posting codec {codec!r} is not supported "
+            f"(tsidx reads and writes only {POSTINGS_CODEC!r})"
+        )
+    return record
 
 
 @dataclass
@@ -110,8 +124,9 @@ class InvertedIndex:
             from tsidx.streaming import read_stream_index
 
             return read_stream_index(spark, path)
-        with open(os.path.join(path, "meta.json")) as f:
-            meta = json.load(f)
+        meta_path = os.path.join(path, "meta.json")
+        with open(meta_path) as f:
+            meta = check_codec(json.load(f), meta_path)
         pinned = set(meta.pop("pinned", []))
         resumable = os.path.exists(os.path.join(path, "config.json"))
         postings = read_table(spark, os.path.join(path, "postings"))

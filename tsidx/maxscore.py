@@ -47,8 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
-from tsidx.oracle import bm25_idf
-from tsidx.wand import _SCORE_SCHEMA, _make_group_scorer
+from tsidx.wand import _SCORE_SCHEMA, _seed_page, _topk_prologue
 
 __all__ = ["maxscore_topk"]
 
@@ -63,52 +62,11 @@ def maxscore_topk(
     """Deterministic BM25 top-k with MaxScore term pruning; returns
     (doc_id, score) ordered by (-score, doc_id), bit-identical to
     ``QueryEngine.bm25_topk`` / ``wand_topk`` / the oracle."""
-    from tsidx.ship import ensure_shipped
-    from tsidx.tokenize import query_terms
-
-    spark = index.docs.sparkSession
-    ensure_shipped(spark)
-    terms = query_terms(query)
-    n = index.meta["n_docs"]
-    rows = (
-        index.terms.filter(F.col("term").isin(terms)).collect() if terms else []
-    )
-    idfs = {r["term"]: bm25_idf(n, r["df"]) for r in rows}
-    if not idfs:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    k1, b = float(index.meta["k1"]), float(index.meta["b"])
-    avgdl = float(index.meta["avgdl"])
-    block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
-
-    cand = index.postings.filter(F.col("term").isin(sorted(idfs)))
-    if index.tombstones is not None:
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
-    scorer = _make_group_scorer(idfs, k, k1, b, avgdl, block_size, codec)
-    total_cand = sum(r["df"] for r in rows if r["term"] in idfs)
-    if total_cand <= small_candidate_limit:
-        # same fast path as WAND: below this size the seed/prune
-        # choreography costs more than one exact pass
-        return (
-            cand.groupBy("block_id")
-            .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
-    idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
+    # same prologue and single-pass fast path as WAND
+    p = _topk_prologue(index, query, k, small_candidate_limit)
+    if isinstance(p, DataFrame):
+        return p
+    idfs, cand = p.idfs, p.cand
 
     # |q|-row per-term bound table (block-wise max of the bound — tighter
     # than one global (max_tf, min_dl) pair) + per-block UBs for seeding.
@@ -117,7 +75,7 @@ def maxscore_topk(
         "term",
         "block_id",
         "block_df",
-        (idf_map[F.col("term")] * bound_wtf).alias("bound"),
+        (p.idf_map[F.col("term")] * p.bound_wtf).alias("bound"),
     ).localCheckpoint()
     term_ub = {
         r["term"]: r["ub"]
@@ -127,30 +85,8 @@ def maxscore_topk(
         F.sum("bound").alias("ub"), F.sum("block_df").alias("cand_count")
     )
 
-    # bounded seed collect (WAND's choreography): top-UB blocks cover the
-    # seed quota because every block holds >= 1 candidate posting
-    seed_rows = (
-        ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
-        .limit(seed_factor * k)
-        .collect()
-    )
-    seed_ids, seen = [], 0
-    for r in seed_rows:
-        seed_ids.append(r["block_id"])
-        seen += r["cand_count"]
-        if seen >= seed_factor * k:
-            break
-    seed_scores = (
-        cand.filter(F.col("block_id").isin(seed_ids))
-        .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-    )
-    seed_top = (
-        seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    )
-    seed_df = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in seed_top] or [], _SCORE_SCHEMA
-    )
+    # WAND's bounded seed choreography over these per-block UBs
+    seed_ids, seed_top, seed_df = _seed_page(p, ub_df, k, seed_factor)
 
     essential = sorted(idfs)
     if len(seed_top) >= k:
@@ -183,7 +119,7 @@ def maxscore_topk(
     rest = (
         cand.join(F.broadcast(ess_blocks), "block_id", "semi")
         .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
+        .applyInPandas(p.scorer, schema=_SCORE_SCHEMA)
     )
     return (
         seed_df.unionByName(rest)

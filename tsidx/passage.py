@@ -82,7 +82,7 @@ def build_passage_index(
 ):
     """Standard fused index build over the chunk frame; chunk docID order
     = (parent_id, chunk_id). Accepts every :func:`tsidx.build.build_index`
-    knob (block_size, codec, ...)."""
+    knob (block_size, strategy, ...)."""
     chunks = chunk_corpus(
         docs,
         size,

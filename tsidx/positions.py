@@ -61,7 +61,7 @@ _DECODED_SCHEMA = "term string, doc_id long, pos int"
 def _make_positional_builder():
     """applyInPandas factory: one group = one block's (doc_id, text) docs ->
     that block's positional posting rows (same fused single-Arrow-pass shape
-    as tsidx.build.make_fused_block_builder)."""
+    as tsidx.build._make_fused_block_builder)."""
     from tsidx.porter2 import stem
 
     def build_block(pdf):

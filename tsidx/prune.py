@@ -234,8 +234,6 @@ def prune_by_impact(engine, lam: float = 0.5) -> InvertedIndex:
     uniform block_id grouping of the build, no skew key).
     """
     index = engine.index
-    if index.meta.get("codec") != "varbyte":
-        raise NotImplementedError("prune_by_impact requires the varbyte codec")
     from tsidx.index import POSTINGS_VARBYTE_SCHEMA
     from tsidx.ship import ensure_shipped
 

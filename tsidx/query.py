@@ -134,12 +134,8 @@ class QueryEngine:
     def posting_doc_ids(self, blocks: DataFrame) -> DataFrame:
         """(term, doc_id) rows — gaps-only decode; the tf/dl streams are
         pruned from the scan entirely (match/boolean paths need ids only)."""
-        if self.index.meta["codec"] == "varbyte":
-            return blocks.select("term", "doc_gaps").mapInPandas(
-                _decode_docids_only, schema="term string, doc_id long"
-            )
-        return blocks.select("term", F.explode("plist").alias("p")).select(
-            "term", "p.doc_id"
+        return blocks.select("term", "doc_gaps").mapInPandas(
+            _decode_docids_only, schema="term string, doc_id long"
         )
 
     def posting_rows_all(self) -> DataFrame:
@@ -147,12 +143,7 @@ class QueryEngine:
         return self._decode(self.index.postings)
 
     def _decode(self, blocks: DataFrame) -> DataFrame:
-        if self.index.meta["codec"] == "varbyte":
-            return blocks.mapInPandas(_decode_blocks, schema=_DECODED_SCHEMA)
-        return blocks.select(
-            "term",
-            F.explode("plist").alias("p"),
-        ).select("term", "p.doc_id", "p.tf", "p.dl")
+        return blocks.mapInPandas(_decode_blocks, schema=_DECODED_SCHEMA)
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Exclude tombstoned doc_ids (logical deletes, tsidx.deletes).

@@ -41,9 +41,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsidx.build import DEFAULT_BLOCK_SIZE, make_fused_block_builder
+from tsidx.build import DEFAULT_BLOCK_SIZE, build_postings
 from tsidx.docids import assign_doc_ids, check_unique_keys
-from tsidx.index import InvertedIndex
+from tsidx.index import POSTINGS_CODEC, InvertedIndex, check_codec
 from tsidx.io import read_table, write_table
 from tsidx.oracle import B, K1
 from tsidx.ship import ensure_shipped
@@ -53,6 +53,12 @@ __all__ = ["build_index_resumable", "pending_shards", "read_manifest", "read_ind
 
 def _config_path(path: str) -> str:
     return os.path.join(path, "config.json")
+
+
+def _load_config(path: str) -> dict:
+    cfg_path = _config_path(path)
+    with open(cfg_path) as f:
+        return check_codec(json.load(f), cfg_path)
 
 
 def _manifest_dir(path: str) -> str:
@@ -77,8 +83,7 @@ def read_manifest(path: str) -> list[dict]:
 
 
 def pending_shards(path: str) -> list[int]:
-    with open(_config_path(path)) as f:
-        cfg = json.load(f)
+    cfg = _load_config(path)
     done = {r["shard_id"] for r in read_manifest(path)}
     return [s for s in range(cfg["n_shards"]) if s not in done]
 
@@ -97,15 +102,13 @@ def _prepare(
     order_cols: tuple[str, ...],
     block_size: int,
     shard_size: int,
-    codec: str,
     check_unique: bool,
     num_partitions: int | None,
 ) -> dict:
     """First-run setup: docID checkpoint + config. Idempotent."""
     cfg_path = _config_path(path)
     if os.path.exists(cfg_path):
-        with open(cfg_path) as f:
-            return json.load(f)
+        return _load_config(path)
     if check_unique:
         check_unique_keys(transcripts, order_cols)
     os.makedirs(path, exist_ok=True)
@@ -122,7 +125,7 @@ def _prepare(
         "order_cols": list(order_cols),
         "block_size": int(block_size),
         "shard_size": int(shard_size),
-        "codec": codec,
+        "codec": POSTINGS_CODEC,
         "n_docs": int(n_docs),
         "n_shards": (n_docs + shard_size - 1) // shard_size if n_docs else 0,
         "k1": K1,
@@ -139,21 +142,7 @@ def _build_shard(spark: SparkSession, path: str, cfg: dict, shard: int) -> None:
     docs = read_table(spark, os.path.join(path, "docs"))
     # doc_id range predicate prunes the range-partitioned docs scan
     shard_docs = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-    from tsidx.index import POSTINGS_ARRAY_SCHEMA, POSTINGS_VARBYTE_SCHEMA
-
-    schema = (
-        POSTINGS_VARBYTE_SCHEMA
-        if cfg["codec"] == "varbyte"
-        else POSTINGS_ARRAY_SCHEMA
-    )
-    postings = (
-        shard_docs.select(
-            "doc_id", "text",
-            F.expr(f"doc_id DIV {int(cfg['block_size'])}").alias("block_id"),
-        )
-        .groupBy("block_id")
-        .applyInPandas(make_fused_block_builder(cfg["codec"]), schema=schema)
-    )
+    postings = build_postings(shard_docs, cfg["block_size"])
     out_dir = os.path.join(path, "postings", f"shard={shard}")
     write_table(postings, out_dir)
 
@@ -216,7 +205,7 @@ def _finalize(spark: SparkSession, path: str, cfg: dict) -> InvertedIndex:
             "k1": cfg["k1"],
             "b": cfg["b"],
             "block_size": cfg["block_size"],
-            "codec": cfg["codec"],
+            "codec": POSTINGS_CODEC,
             "order_cols": cfg["order_cols"],
             "pinned": [],
             "version": cfg["version"],
@@ -248,7 +237,6 @@ def build_index_resumable(
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     block_size: int = DEFAULT_BLOCK_SIZE,
     shard_size: int | None = None,
-    codec: str = "varbyte",
     check_unique: bool = True,
     num_partitions: int | None = None,
     max_shards: int | None = None,
@@ -267,7 +255,7 @@ def build_index_resumable(
     if shard_size % block_size != 0:
         raise ValueError("shard_size must be a multiple of block_size")
     cfg = _prepare(
-        spark, transcripts, path, order_cols, block_size, shard_size, codec,
+        spark, transcripts, path, order_cols, block_size, shard_size,
         check_unique, num_partitions,
     )
     todo = pending_shards(path)
@@ -309,8 +297,7 @@ def read_index_at(
             f"{path} is not a resumable-layout index (no config.json): "
             "snapshots exist only for build_index_resumable outputs"
         )
-    with open(cfg_path) as f:
-        cfg = json.load(f)
+    cfg = _load_config(path)
     if not 0 <= through_shard < cfg["n_shards"]:
         raise ValueError(
             f"through_shard {through_shard} outside [0, {cfg['n_shards']})"
@@ -344,7 +331,7 @@ def read_index_at(
         "k1": cfg["k1"],
         "b": cfg["b"],
         "block_size": cfg["block_size"],
-        "codec": cfg["codec"],
+        "codec": POSTINGS_CODEC,
         "order_cols": cfg["order_cols"],
         "version": cfg["version"],
     }

@@ -34,13 +34,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsidx.build import make_fused_block_builder
+from tsidx.build import build_postings
 from tsidx.docids import assign_doc_ids
-from tsidx.index import (
-    POSTINGS_ARRAY_SCHEMA,
-    POSTINGS_VARBYTE_SCHEMA,
-    InvertedIndex,
-)
+from tsidx.index import POSTINGS_CODEC, InvertedIndex, check_codec
 from tsidx.io import read_table, write_table
 from tsidx.oracle import B, K1
 from tsidx.resume import read_manifest
@@ -106,17 +102,17 @@ def _state_path(path: str) -> str:
     return os.path.join(path, "stream_state.json")
 
 
-def _load_state(path: str, block_size: int, codec: str) -> dict:
+def _load_state(path: str, block_size: int) -> dict:
     p = _state_path(path)
     if os.path.exists(p):
         with open(p) as f:
-            return json.load(f)
+            return check_codec(json.load(f), p)
     return {
         "next_doc_id": 0,
         "n_docs": 0,
         "total_tokens": 0,
         "block_size": int(block_size),
-        "codec": codec,
+        "codec": POSTINGS_CODEC,
         "batches": {},
     }
 
@@ -131,7 +127,6 @@ def append_batch(
     batch_id: int,
     *,
     block_size: int = 8192,
-    codec: str = "varbyte",
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> None:
     """Append one micro-batch to the index at *path* (foreachBatch body).
@@ -141,8 +136,8 @@ def append_batch(
     """
     spark = batch.sparkSession
     ensure_shipped(spark)
-    state = _load_state(path, block_size, codec)
-    if state["codec"] != codec or state["block_size"] != block_size:
+    state = _load_state(path, block_size)
+    if state["block_size"] != block_size:
         raise ValueError("batch parameters differ from the index's")
     key = str(batch_id)
     replay = state["batches"].get(key)
@@ -162,14 +157,7 @@ def append_batch(
         return
     docs = ids.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
 
-    schema = POSTINGS_VARBYTE_SCHEMA if codec == "varbyte" else POSTINGS_ARRAY_SCHEMA
-    postings = (
-        docs.select(
-            "doc_id", "text", F.expr(f"doc_id DIV {int(block_size)}").alias("block_id")
-        )
-        .groupBy("block_id")
-        .applyInPandas(make_fused_block_builder(codec), schema=schema)
-    )
+    postings = build_postings(docs, block_size)
     out_dir = os.path.join(path, "postings", f"shard={batch_id}")
     write_table(postings, out_dir)
     write_table(docs, os.path.join(path, "docs", f"shard={batch_id}"))
@@ -221,7 +209,7 @@ def append_batch(
         "k1": K1,
         "b": B,
         "block_size": int(block_size),
-        "codec": codec,
+        "codec": POSTINGS_CODEC,
         "order_cols": list(order_cols),
         "pinned": [],
         "version": 1,
@@ -238,7 +226,6 @@ def stream_build(
     path: str,
     *,
     block_size: int = 8192,
-    codec: str = "varbyte",
     checkpoint: str | None = None,
     trigger: dict | None = None,
 ):
@@ -246,9 +233,7 @@ def stream_build(
     appends; returns the started StreamingQuery."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        append_batch(
-            batch_df, path, batch_id, block_size=block_size, codec=codec
-        )
+        append_batch(batch_df, path, batch_id, block_size=block_size)
 
     writer = stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint or os.path.join(path, "_checkpoint")
@@ -359,8 +344,9 @@ def compact_stream_index(
 
 def read_stream_index(spark, path: str) -> InvertedIndex:
     """Load a streaming-built index (shard-partitioned docs + postings)."""
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta_path = os.path.join(path, "meta.json")
+    with open(meta_path) as f:
+        meta = check_codec(json.load(f), meta_path)
     pinned = set(meta.pop("pinned", []))
     rows = [
         {"compacted_from": "", **r} for r in read_manifest(path)
@@ -424,8 +410,9 @@ def read_stream_index_at(spark, path: str, through_batch: int) -> InvertedIndex:
     missing = sorted(set(range(through_batch + 1)) - have)
     if missing:
         raise ValueError(f"uncommitted batches in snapshot prefix: {missing}")
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta_path = os.path.join(path, "meta.json")
+    with open(meta_path) as f:
+        meta = check_codec(json.load(f), meta_path)
     meta.pop("pinned", None)
     n_docs = sum(int(r["doc_count"]) for r in sel)
     total_tokens = sum(int(r["token_count"]) for r in sel)

@@ -50,7 +50,6 @@ def update_docs(index: InvertedIndex, updates) -> InvertedIndex:
             "resurrect deleted docs in rebuilt blocks; run apply_deletes "
             "first"
         )
-    codec = index.meta.get("codec")
     spark = index.docs.sparkSession
     from tsidx.ship import ensure_shipped
 
@@ -80,32 +79,13 @@ def update_docs(index: InvertedIndex, updates) -> InvertedIndex:
     )
 
     # 2. rebuild only the touched blocks with the standard fused builder
-    from tsidx.build import (
-        POSTINGS_ARRAY_SCHEMA,
-        POSTINGS_VARBYTE_SCHEMA,
-        make_fused_block_builder,
-    )
+    from tsidx.build import build_postings
 
     block_size = int(index.meta["block_size"])
     touched_blocks = upd.select(
         F.expr(f"doc_id DIV {block_size}").alias("block_id")
     ).distinct()
-    rebuild_input = (
-        docs.select(
-            "doc_id",
-            "text",
-            F.expr(f"doc_id DIV {block_size}").alias("block_id"),
-        )
-        # AQE broadcasts the touched-block set while small, shuffle-joins
-        # a mass update
-        .join(touched_blocks, "block_id", "semi")
-    )
-    schema = (
-        POSTINGS_VARBYTE_SCHEMA if codec == "varbyte" else POSTINGS_ARRAY_SCHEMA
-    )
-    rebuilt = rebuild_input.groupBy("block_id").applyInPandas(
-        make_fused_block_builder(codec), schema=schema
-    )
+    rebuilt = build_postings(docs, block_size, blocks=touched_blocks)
     untouched = index.postings.join(touched_blocks, "block_id", "anti")
     postings = untouched.unionByName(rebuilt)
 

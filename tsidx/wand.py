@@ -42,9 +42,10 @@ exactly.
 
 from __future__ import annotations
 
-import heapq
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
@@ -56,7 +57,7 @@ _SCORE_SCHEMA = "doc_id long, score double"
 
 
 def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
-                        b: float, avgdl: float, block_size: int, codec: str):
+                        b: float, avgdl: float, block_size: int):
     """Core block scorer: one pandas group (one block's term rows for one
     query) -> (doc_id int64 array, score float64 array), local top-k,
     deterministic (-score, doc_id) order. Shared by the single-query and
@@ -73,18 +74,12 @@ def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
         i = rows_by_term.get(term)
         if i is None:
             continue
-        if codec == "varbyte":
-            doc_ids, tfs, dls = decode_posting_block(
-                bytes(pdf["doc_gaps"][i]), bytes(pdf["tfs"][i]), bytes(pdf["dls"][i])
-            )
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            off = (doc_ids - np.uint64(base)).astype(np.int64)
-        else:
-            plist = pdf["plist"][i]
-            off = np.fromiter((p["doc_id"] for p in plist), dtype=np.int64) - base
-            tf = np.fromiter((p["tf"] for p in plist), dtype=np.float64)
-            dl = np.fromiter((p["dl"] for p in plist), dtype=np.float64)
+        doc_ids, tfs, dls = decode_posting_block(
+            bytes(pdf["doc_gaps"][i]), bytes(pdf["tfs"][i]), bytes(pdf["dls"][i])
+        )
+        tf = tfs.astype(np.float64)
+        dl = dls.astype(np.float64)
+        off = (doc_ids - np.uint64(base)).astype(np.int64)
         # identical op order to oracle.bm25_contributions
         contrib = idfs[term] * ((tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl)))
         dense[off] += contrib
@@ -114,14 +109,14 @@ def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
 
 
 def _make_group_scorer(idfs: dict[str, float], k: int, k1: float, b: float,
-                       avgdl: float, block_size: int, codec: str):
+                       avgdl: float, block_size: int):
     """applyInPandas scorer: one group = one block_id's term blocks."""
 
     def score_group(pdf):
         import pandas as pd
 
         doc_ids, scores = _score_block_arrays(
-            pdf, idfs, k, k1, b, avgdl, block_size, codec
+            pdf, idfs, k, k1, b, avgdl, block_size
         )
         return pd.DataFrame({"doc_id": doc_ids, "score": scores})
 
@@ -130,7 +125,7 @@ def _make_group_scorer(idfs: dict[str, float], k: int, k1: float, b: float,
 
 def _make_batch_group_scorer(idfs_by_query: dict[str, dict[str, float]],
                              k: int, k1: float, b: float, avgdl: float,
-                             block_size: int, codec: str):
+                             block_size: int):
     """applyInPandas scorer for (query_id, block_id) groups: resolves the
     group's idf map from the (driver-built, closure-captured) per-query
     dict, then scores exactly like the single-query engine — so every
@@ -141,7 +136,7 @@ def _make_batch_group_scorer(idfs_by_query: dict[str, dict[str, float]],
 
         qid = pdf["query_id"].iloc[0]
         doc_ids, scores = _score_block_arrays(
-            pdf, idfs_by_query[qid], k, k1, b, avgdl, block_size, codec
+            pdf, idfs_by_query[qid], k, k1, b, avgdl, block_size
         )
         return pd.DataFrame(
             {"query_id": qid, "doc_id": doc_ids, "score": scores}
@@ -150,11 +145,52 @@ def _make_batch_group_scorer(idfs_by_query: dict[str, dict[str, float]],
     return score_group
 
 
-def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
-              seed_factor: int = 4, small_candidate_limit: int = 200_000) -> DataFrame:
-    """Deterministic BM25 top-k with block-max pruning; returns
-    (doc_id, score) ordered by (-score, doc_id), bit-identical to the
-    oracle and to ``QueryEngine.bm25_topk``."""
+def _bound_wtf(k1: float, b: float, avgdl: float) -> Column:
+    """JVM expression: the BM25 tf/length factor at a block's
+    (max_tf, min_dl) — an upper bound on every posting of the block."""
+    max_tf = F.col("max_tf").cast("double")
+    min_dl = F.col("min_dl").cast("double")
+    return (max_tf * F.lit(k1 + 1.0)) / (
+        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
+    )
+
+
+def _with_dead(cand: DataFrame, index: InvertedIndex) -> DataFrame:
+    """Attach each candidate block's deleted doc_ids as ``_dead`` (no-op
+    without tombstones); the scorer masks them before its local top-k.
+    UBs stay valid upper bounds (removing docs only lowers block
+    scores)."""
+    if index.tombstones is None:
+        return cand
+    block_size = int(index.meta["block_size"])
+    dead_by_block = (
+        index.tombstones.select(
+            "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
+        )
+        .groupBy("block_id")
+        .agg(F.collect_list("doc_id").alias("_dead"))
+    )
+    return cand.join(dead_by_block, "block_id", "left")
+
+
+@dataclass
+class _Prologue:
+    """What a single-query block-max ranker (WAND, MaxScore) prunes from."""
+
+    idfs: dict[str, float]
+    cand: DataFrame  # the query terms' posting blocks (+ ``_dead``)
+    scorer: Callable
+    idf_map: Column  # term -> idf literal map
+    bound_wtf: Column
+
+
+def _topk_prologue(index: InvertedIndex, query: str | list[str], k: int,
+                   small_candidate_limit: int) -> DataFrame | _Prologue:
+    """Shared opening of ``wand_topk`` and ``maxscore_topk``: driver-side
+    idfs (one |q|-row collect), the query terms' candidate blocks with
+    their tombstones, and the block scorer. Returns the final page when
+    that already answers the query (no known term, or few enough
+    candidates for the single-pass fast path)."""
     from tsidx.ship import ensure_shipped
     from tsidx.tokenize import query_terms
 
@@ -171,22 +207,9 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     k1, b = float(index.meta["k1"]), float(index.meta["b"])
     avgdl = float(index.meta["avgdl"])
     block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
 
-    cand = index.postings.filter(F.col("term").isin(sorted(idfs)))
-    if index.tombstones is not None:
-        # per-block deleted-id lists ride along with the candidate blocks;
-        # the scorer masks them before its local top-k. UBs stay valid
-        # upper bounds (removing docs only lowers block scores).
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
-    scorer = _make_group_scorer(idfs, k, k1, b, avgdl, block_size, codec)
+    cand = _with_dead(index.postings.filter(F.col("term").isin(sorted(idfs))), index)
+    scorer = _make_group_scorer(idfs, k, k1, b, avgdl, block_size)
     # total candidate postings = Σ df over the query terms — already on the
     # driver from the (|q|-row) terms fetch above; no extra job
     total_cand = sum(r["df"] for r in rows if r["term"] in idfs)
@@ -200,23 +223,16 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
             .limit(k)
         )
     idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
-    # per-block upper bounds — a metadata-only DataFrame (payload columns are
-    # pruned from the scan); never collected in full. Eagerly checkpointed:
-    # both the seed selection and the survivor filter read it, and the
-    # checkpoint (~24 B/block, <= ~10^6 blocks at 10^12 docs) avoids
-    # re-scanning the candidate metadata per consumer; blocks are freed by
-    # the context cleaner when the frame is garbage-collected.
-    ub_df = cand.groupBy("block_id").agg(
-        F.sum(idf_map[F.col("term")] * bound_wtf).alias("ub"),
-        F.sum("block_df").alias("cand_count"),
-    ).localCheckpoint()
-    # bounded seed collect: every block carries >= 1 candidate posting, so
-    # the seed_factor*k highest-UB blocks always cover the seed quota
+    return _Prologue(idfs, cand, scorer, idf_map, _bound_wtf(k1, b, avgdl))
+
+
+def _seed_page(p: _Prologue, ub_df: DataFrame, k: int, seed_factor: int):
+    """Exactly score the highest-UB blocks covering ``seed_factor * k``
+    candidate postings. Returns ``(seed block ids, seed top-k rows,
+    seed page DataFrame)``; θ is the k-th seed score when the page is
+    full. Bounded collects only: every block carries >= 1 candidate
+    posting, so the ``seed_factor * k`` highest-UB blocks always cover
+    the seed quota."""
     seed_rows = (
         ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
         .limit(seed_factor * k)
@@ -230,14 +246,37 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
             break
 
     seed_scores = (
-        cand.filter(F.col("block_id").isin(seed_ids))
+        p.cand.filter(F.col("block_id").isin(seed_ids))
         .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
+        .applyInPandas(p.scorer, schema=_SCORE_SCHEMA)
     )
     seed_top = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    seed_df = spark.createDataFrame(
+    seed_df = p.cand.sparkSession.createDataFrame(
         [(r["doc_id"], r["score"]) for r in seed_top] or [], _SCORE_SCHEMA
     )
+    return seed_ids, seed_top, seed_df
+
+
+def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
+              seed_factor: int = 4, small_candidate_limit: int = 200_000) -> DataFrame:
+    """Deterministic BM25 top-k with block-max pruning; returns
+    (doc_id, score) ordered by (-score, doc_id), bit-identical to the
+    oracle and to ``QueryEngine.bm25_topk``."""
+    p = _topk_prologue(index, query, k, small_candidate_limit)
+    if isinstance(p, DataFrame):
+        return p
+    cand = p.cand
+    # per-block upper bounds — a metadata-only DataFrame (payload columns are
+    # pruned from the scan); never collected in full. Eagerly checkpointed:
+    # both the seed selection and the survivor filter read it, and the
+    # checkpoint (~24 B/block, <= ~10^6 blocks at 10^12 docs) avoids
+    # re-scanning the candidate metadata per consumer; blocks are freed by
+    # the context cleaner when the frame is garbage-collected.
+    ub_df = cand.groupBy("block_id").agg(
+        F.sum(p.idf_map[F.col("term")] * p.bound_wtf).alias("ub"),
+        F.sum("block_df").alias("cand_count"),
+    ).localCheckpoint()
+    seed_ids, seed_top, seed_df = _seed_page(p, ub_df, k, seed_factor)
     survivors = ub_df.filter(~F.col("block_id").isin(seed_ids))
     if len(seed_top) >= k:
         theta = seed_top[k - 1]["score"]
@@ -250,7 +289,7 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     rest = (
         cand.join(F.broadcast(survivors.select("block_id")), "block_id", "semi")
         .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
+        .applyInPandas(p.scorer, schema=_SCORE_SCHEMA)
     )
     return (
         seed_df.unionByName(rest)
@@ -311,20 +350,10 @@ def wand_topk_batch(
     k1, b = float(index.meta["k1"]), float(index.meta["b"])
     avgdl = float(index.meta["avgdl"])
     block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
     kk = int(k)
 
     used_terms = sorted({t for m in idfs_by_query.values() for t in m})
-    cand = index.postings.filter(F.col("term").isin(used_terms))
-    if index.tombstones is not None:
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
+    cand = _with_dead(index.postings.filter(F.col("term").isin(used_terms)), index)
 
     # replicate candidate blocks per query via the broadcast fan
     fan = spark.createDataFrame(
@@ -334,7 +363,7 @@ def wand_topk_batch(
     cand_q = cand.join(F.broadcast(fan), "term")
 
     scorer = _make_batch_group_scorer(
-        idfs_by_query, kk, k1, b, avgdl, block_size, codec
+        idfs_by_query, kk, k1, b, avgdl, block_size
     )
 
     # per-(query, block) upper bounds — metadata only, payloads pruned
@@ -346,16 +375,11 @@ def wand_topk_batch(
         ],
         "query_id string, term string, idf double",
     )
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
     ub_df = (
         cand.join(F.broadcast(idf_fan), "term")
         .groupBy("query_id", "block_id")
         .agg(
-            F.sum(F.col("idf") * bound_wtf).alias("ub"),
+            F.sum(F.col("idf") * _bound_wtf(k1, b, avgdl)).alias("ub"),
             F.sum("block_df").alias("cand_count"),
         )
         .localCheckpoint()
