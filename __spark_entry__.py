@@ -410,10 +410,10 @@ def _q_percolate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-max WAND top-k — bit-identical to the naive BM25 plan by
-    construction (safe pruning; tsidx/wand.py), so it shares bm25_topk's
-    oracle SQL. ``small_candidate_limit=0`` forces the seed/prune path so
-    the correctness gate exercises the pruning machinery, not the fast
+    """The exact top-k ranker (tsidx/wand.py) on its prune path — exact by
+    construction (safe pruning), so it shares bm25_topk's oracle SQL.
+    ``small_candidate_limit=0`` forces the seed/prune path so the
+    correctness gate exercises the pruning machinery, not the fast
     path."""
     from tsidx.wand import wand_topk
 
@@ -3221,13 +3221,12 @@ def _q_contains_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MaxScore term-pruned top-k (tsidx/maxscore.py) — bit-identical to
-    the naive BM25 plan by construction (safe term pruning: skipped docs
-    carry only non-essential terms whose bounds sum below θ), so it
-    shares bm25_topk's oracle SQL. ``small_candidate_limit=0`` forces
-    the seed/partition/prune path so the gate exercises the pruning
-    machinery, not the fast path."""
-    from tsidx.maxscore import maxscore_topk
+    """``tsidx.wand.maxscore_topk``, the ranker's MaxScore name — exact
+    by construction (safe pruning: skipped blocks' upper bounds sum below
+    θ), so it shares bm25_topk's oracle SQL.
+    ``small_candidate_limit=0`` forces the seed/prune path so the gate
+    exercises the pruning machinery, not the fast path."""
+    from tsidx.wand import maxscore_topk
 
     idx = get_index(spark, sf_dir)
     return maxscore_topk(

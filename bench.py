@@ -193,15 +193,6 @@ def main():
         "bm25_topk_wide",
         lambda: eng.bm25_topk("vector stream dup small batch", 100).collect(),
     )
-    p50("wand_topk", lambda: eng.wand_topk("customer query merge", 25).collect())
-    p50(
-        "wand_topk_wide",
-        lambda: eng.wand_topk("vector stream dup small batch", 100).collect(),
-    )
-    p50(
-        "maxscore_topk",
-        lambda: eng.maxscore_topk("customer query merge", 25).collect(),
-    )
 
     p50(
         "bool_search",

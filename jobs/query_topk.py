@@ -1,11 +1,13 @@
 """spark-submit entry point: top-k BM25 query against a persistent index.
 
     python jobs/query_topk.py --index /tmp/idx --query "fire heat" -k 10 \
-        --engine wand --parallelism 8
+        --parallelism 8
 
-Engines: ``naive`` (Catalyst join+agg+TakeOrdered plan), ``wand``
-(block-max pruned, tsidx.wand) and ``maxscore`` (term-pruned,
-tsidx.maxscore) — all rank- and score-identical by construction.
+``--mode topk`` runs the one exact BM25 top-k ranker (``bm25_topk``,
+block-max WAND, tsidx.wand). ``--engine`` picks the ``--mode batch``
+plan: ``wand`` (per-query block pruning, ``wand_topk_batch``) or
+``naive`` (one shared scan, ``bm25_topk_batch``) — rank- and
+score-identical by construction.
 ``--mode match`` runs the reference's disjunctive boolean retrieval instead
 (results in docID order, ``ts_type_filter/inverted_index.py:71-101``).
 """
@@ -29,7 +31,8 @@ def main() -> None:
     ap.add_argument("--query", required=True, nargs="+")
     ap.add_argument("-k", type=int, default=10)
     ap.add_argument(
-        "--engine", default="wand", choices=["naive", "wand", "maxscore"]
+        "--engine", default="wand", choices=["naive", "wand"],
+        help="--mode batch plan",
     )
     ap.add_argument(
         "--mode",
@@ -179,10 +182,6 @@ def main() -> None:
             rows = eng.bm25_topk_decayed(
                 query, args.k, args.now, half_life_days=args.half_life_days
             ).collect()
-        elif args.engine == "wand":
-            rows = eng.wand_topk(query, args.k).collect()
-        elif args.engine == "maxscore":
-            rows = eng.maxscore_topk(query, args.k).collect()
         else:
             rows = eng.bm25_topk(query, args.k).collect()
         latencies.append(time.time() - t0)

@@ -1,14 +1,16 @@
-"""MaxScore rank-identity tests: term-pruned top-k vs naive plan vs oracle,
-plus a pruning-effectiveness check on a stopword-dominated query."""
+"""``maxscore_topk`` (the ranker's MaxScore name) rank-identity tests: vs
+the JVM ``bm25_scores`` plan vs the oracle, plus a rare-term + stopwords
+query on the prune path."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsidx.build import build_index
-from tsidx.maxscore import maxscore_topk
 from tsidx.oracle import OracleIndex
 from tsidx.query import QueryEngine
+from tsidx.wand import maxscore_topk
 
 QUERIES = [
     "same",
@@ -54,7 +56,11 @@ def test_maxscore_matches_naive_and_wand(built, query):
     idx, _ = built
     eng = QueryEngine(idx)
     naive = [
-        (r["doc_id"], r["score"]) for r in eng.bm25_topk(query, 25).collect()
+        (r["doc_id"], r["score"])
+        for r in eng.bm25_scores(query)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(25)
+        .collect()
     ]
     ms = [
         (r["doc_id"], r["score"])
@@ -67,10 +73,10 @@ def test_maxscore_matches_naive_and_wand(built, query):
     assert naive == ms == wd
 
 
-def test_maxscore_prunes_stopword_terms(spark, sonnets):
+def test_maxscore_prunes_stopword_terms(spark):
     """On a corpus where one rare term dominates and stopwords are cheap,
-    the essential set must shrink below the full query — candidate blocks
-    are restricted to those holding the essential (rare) term."""
+    the prune path returns exactly the rare-term docs: blocks without the
+    rare term have upper bounds below θ."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
@@ -99,11 +105,14 @@ def test_maxscore_prunes_stopword_terms(spark, sonnets):
     marker_ids = {i for i in range(2000) if i % 250 == 0}
     assert len(got) == 5
     assert {d for d, _ in got} <= marker_ids
-    # and the page equals the naive plan exactly
+    # and the page equals the JVM scoring plan exactly
     eng = QueryEngine(idx)
     naive = [
         (r["doc_id"], r["score"])
-        for r in eng.bm25_topk("zzrare the and of", 5).collect()
+        for r in eng.bm25_scores("zzrare the and of")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(5)
+        .collect()
     ]
     assert got == naive
 

@@ -7,6 +7,7 @@ import datetime
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsidx.build import build_index
 from tsidx.oracle import OracleIndex
@@ -59,6 +60,13 @@ def test_random_queries_rank_identical(built):
         k = rng.choice([1, 5, 25, 400])
         assert [r["doc_id"] for r in eng.match(q).collect()] == oracle.match(q), q
         got_n = [(r["doc_id"], r["score"]) for r in eng.bm25_topk(q, k).collect()]
+        got_s = [
+            (r["doc_id"], r["score"])
+            for r in eng.bm25_scores(q)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+            .collect()
+        ]
         got_w = [
             (r["doc_id"], r["score"])
             for r in wand_topk(idx, q, k, small_candidate_limit=0).collect()
@@ -66,6 +74,18 @@ def test_random_queries_rank_identical(built):
         want = oracle.bm25_topk(q, k)
         assert got_n == want, (q, k, "naive")
         assert got_w == want, (q, k, "wand")
+        assert got_s == want, (q, k, "bm25_scores")
+
+
+def test_topk_k_zero_and_negative(built):
+    """k == 0 is an empty page and k < 0 an error, on the prune path and
+    on the fast path alike."""
+    idx, _ = built
+    for limit in (0, 200_000):
+        got = wand_topk(idx, "fire running", 0, small_candidate_limit=limit)
+        assert got.collect() == [], limit
+        with pytest.raises(ValueError):
+            wand_topk(idx, "fire running", -1, small_candidate_limit=limit)
 
 
 def test_random_dictionary_expansion_modes(built):

@@ -1,13 +1,15 @@
-"""Block-max WAND rank-identity tests: WAND vs naive plan vs oracle."""
+"""Block-max WAND rank-identity tests: the ranker vs the JVM
+``bm25_scores`` plan vs the oracle."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsidx.build import build_index
 from tsidx.oracle import OracleIndex
 from tsidx.query import QueryEngine
-from tsidx.wand import wand_topk
+from tsidx.wand import _SEED_FACTOR, wand_topk
 
 QUERIES = [
     "same",
@@ -47,7 +49,13 @@ def test_wand_rank_identical_to_oracle(built, query, k, limit):
 def test_wand_matches_naive_plan(built, query):
     idx, _ = built
     eng = QueryEngine(idx)
-    naive = [(r["doc_id"], r["score"]) for r in eng.bm25_topk(query, 25).collect()]
+    naive = [
+        (r["doc_id"], r["score"])
+        for r in eng.bm25_scores(query)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(25)
+        .collect()
+    ]
     wand = [(r["doc_id"], r["score"]) for r in wand_topk(idx, query, 25).collect()]
     assert naive == wand
 
@@ -55,7 +63,7 @@ def test_wand_matches_naive_plan(built, query):
 def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     """Survivor selection must stay a DataFrame plan: with >= 10^4 posting
     blocks, no single driver collect during wand_topk may return more than
-    O(seed_factor * k) rows (regression: per-block metadata collect + giant
+    O(_SEED_FACTOR * k) rows (regression: per-block metadata collect + giant
     isin() survivor literal)."""
     import datetime
 
@@ -73,7 +81,7 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     n_blocks = idx.postings.select("block_id").distinct().count()
     assert n_blocks >= 10_000
 
-    k, seed_factor = 10, 4
+    k = 10
     collected_sizes = []
     df_cls = type(idx.postings)  # the concrete (classic) DataFrame class
     real_collect = df_cls.collect
@@ -87,13 +95,12 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     got = [
         (r["doc_id"], r["score"])
         for r in real_collect(
-            wand_topk(idx, "fire heat", k, seed_factor=seed_factor,
-                      small_candidate_limit=0)
+            wand_topk(idx, "fire heat", k, small_candidate_limit=0)
         )
     ]
     monkeypatch.undo()
     assert collected_sizes, "expected bounded driver collects"
-    cap = max(seed_factor * k, 64)  # terms fetch + seed rows + seed top-k
+    cap = max(_SEED_FACTOR * k, 64)  # terms fetch + seed rows + seed top-k
     assert max(collected_sizes) <= cap, collected_sizes
 
     oracle = OracleIndex()

@@ -5,18 +5,21 @@ Semantics bound to the reference:
 - ``match`` — disjunctive boolean retrieval with results in docID (insertion)
   order, pinned docs unioned in, unknown terms silently ignored
   (``/root/reference/ts_type_filter/inverted_index.py:71-101``).
-- ``bm25_topk`` — the canonical BM25 spec of SURVEY §7.3. Scores are
-  bit-identical to :class:`tsidx.oracle.OracleIndex`: idf is computed on the
-  driver with CPython ``math.log``; per-(doc, term) contributions use the
-  same double-precision expression shape as the oracle; per-doc sums are
-  accumulated in sorted-term order via ``aggregate(sort_array(collect_list))``
-  (never shuffle-arrival order); ties break by ascending doc_id.
+- ``bm25_topk`` (alias ``wand_topk``, ``maxscore_topk``) — the canonical
+  BM25 spec of SURVEY §7.3, answered by the one exact top-k ranker
+  :func:`tsidx.wand.wand_topk` (block-max WAND pruning); ties break by
+  ascending doc_id.
+- ``bm25_scores`` — every candidate doc's score as a JVM plan, the base of
+  the filtered, paged, decayed, grouped and batched variants. Scores are
+  bit-identical to :class:`tsidx.oracle.OracleIndex` and to the ranker: idf
+  is computed on the driver with CPython ``math.log``; per-(doc, term)
+  contributions use the same double-precision expression shape as the
+  oracle; per-doc sums are accumulated in sorted-term order via
+  ``aggregate(sort_array(collect_list))`` (never shuffle-arrival order).
 
 Physical behavior: the only data read is the posting blocks of the query's
 terms — ``term IN (...)`` is pushed to the parquet/Iceberg scan (blocks are
-written sorted by term, so row-group pruning applies). The naive plan's
-top-k executes as TakeOrdered (per-partition heap + driver merge), shuffle-
-free after the per-doc aggregation. The WAND engine (tsidx.wand) consumes the
+written sorted by term, so row-group pruning applies). The ranker reads the
 same block rows.
 """
 
@@ -157,8 +160,8 @@ class QueryEngine:
     def _contrib_expr(self, idfs: dict[str, float]):
         """``(idf_map_col, contrib_col)`` — THE canonical per-(doc, term)
         BM25 contribution expression. Single definition on purpose: the
-        documented bit-identity between ``bm25_topk``, ``explain_scores``
-        (sum of contribs == score), WAND, and the single-node oracle
+        documented bit-identity between ``bm25_scores``, ``explain_scores``
+        (sum of contribs == score), the ranker, and the single-node oracle
         holds only while every path evaluates this exact IEEE754
         expression shape."""
         k1 = float(self.index.meta["k1"])
@@ -385,10 +388,13 @@ class QueryEngine:
         )
 
     def bm25_topk(self, query: str | list[str], k: int) -> DataFrame:
-        """Deterministic top-k by (-score, doc_id); executes as TakeOrdered."""
-        return self.bm25_scores(query).orderBy(
-            F.desc("score"), F.asc("doc_id")
-        ).limit(k)
+        """Deterministic BM25 top-k by (-score, doc_id), bit-identical to
+        the oracle — the one exact ranker, :func:`tsidx.wand.wand_topk`."""
+        from tsidx.wand import wand_topk
+
+        return wand_topk(self.index, query, k)
+
+    wand_topk = maxscore_topk = bm25_topk
 
     def bm25_plus_scores(
         self, query: str | list[str], delta: float = 0.5
@@ -600,7 +606,7 @@ class QueryEngine:
         ``(doc_id, score)`` cursor — a result row of the previous page —
         in (-score, doc_id) order. Stateless search-after, the deep-paging
         shape that avoids OFFSET's scan-and-discard. Same single term-IN
-        scan as ``bm25_topk``; the cursor predicate prunes before the
+        scan as ``bm25_scores``; the cursor predicate prunes before the
         TakeOrdered."""
         d, s = int(after[0]), float(after[1])
         return (
@@ -1492,20 +1498,6 @@ class QueryEngine:
             .orderBy(F.desc("score"), F.asc("term"))
             .limit(int(top_n))
         )
-
-    def wand_topk(self, query: str | list[str], k: int) -> DataFrame:
-        """Block-max WAND top-k (tsidx.wand) — rank- and score-identical to
-        :meth:`bm25_topk`, prunes non-competitive posting blocks."""
-        from tsidx.wand import wand_topk
-
-        return wand_topk(self.index, query, k)
-
-    def maxscore_topk(self, query: str | list[str], k: int) -> DataFrame:
-        """MaxScore top-k (tsidx.maxscore) — rank- and score-identical to
-        :meth:`bm25_topk`, prunes terms whose bounds can't reach θ."""
-        from tsidx.maxscore import maxscore_topk
-
-        return maxscore_topk(self.index, query, k)
 
     def highlight(self, query: str | list[str], text: str,
                   start: str = "[bold green]", end: str = "[/bold green]") -> str:

@@ -1,49 +1,63 @@
-"""Block-max WAND top-k: safe block pruning with a bounded heap.
+"""The exact BM25 top-k ranker: block-max WAND with a bounded heap.
 
-SURVEY §2.4 N7. The naive plan (`QueryEngine.bm25_topk`) decodes every
-posting of every query term, scores, and TakeOrdereds. This engine prunes
-whole posting *blocks* using the block-max metadata stored at build time
-(`max_wtf` = block max of the BM25 tf/length factor, `tsidx/build.py`):
+SURVEY §2.4 N7. ``wand_topk`` is the one single-query top-k plan:
+``QueryEngine.bm25_topk`` / ``wand_topk`` / ``maxscore_topk`` and this
+module's ``maxscore_topk`` alias all run it. It prunes whole posting
+*blocks* (Ding & Suel, SIGIR 2011) using the block-max metadata stored
+at build time (``max_tf`` / ``min_dl`` per posting block,
+``tsidx/build.py``):
 
+0. **Fast path.** When the query's Σ df (on the driver from the |q|-row
+   terms fetch) is at most ``small_candidate_limit``, every candidate
+   block is scored in one pass; the prune choreography would cost more.
 1. **Upper bounds.** For each candidate ``block_id`` (a docID range),
-   ``UB = Σ_t idf_t · wtf(max_tf, min_dl)`` over the query's terms — the
-   BM25 tf/length factor is monotone increasing in tf and decreasing in dl,
-   so this bounds every doc in the range. Computed JVM-side from metadata
-   columns only (no posting bytes touched).
-2. **Seed θ.** Exactly score the few highest-UB block groups (enough to
-   cover ≥ seed_factor·k candidate postings); θ = the k-th best seed score —
-   a valid lower bound on the final k-th score.
-3. **Prune + score.** Only blocks with ``UB ≥ θ − ε`` are decoded and scored.
-   Scoring runs as ``applyInPandas`` over ``groupBy(block_id)``: because a
-   document's postings for *all* terms share its block_id, every doc's score
-   is complete within one group, so each group emits only its local top-k
-   (bounded min-heap semantics) and the global top-k is the TakeOrdered
-   merge of group winners.
+   ``UB_b = Σ_t idf_t · wtf(max_tf, min_dl)`` over the query's terms —
+   the BM25 tf/length factor is monotone increasing in tf and decreasing
+   in dl, so this bounds every doc in the range. Computed JVM-side from
+   metadata columns only (no posting bytes touched) and checkpointed.
+2. **Seed θ.** Exactly score the highest-UB blocks covering
+   ≥ ``_SEED_FACTOR``·k candidate postings; θ = the k-th best seed score,
+   a lower bound on the final k-th score.
+3. **Prune + score.** Only non-seed blocks with ``UB_b ≥ θ − ε`` are
+   decoded and scored. Scoring runs as ``applyInPandas`` over
+   ``groupBy(block_id)``: because a document's postings for *all* terms
+   share its block_id, every doc's score is complete within one group, so
+   each group emits only its local top-k and the global top-k is the
+   TakeOrdered merge of group winners and the seed page.
 
-Rank identity: per-doc contributions accumulate in sorted-term order into a
-float64 dense array — the same IEEE754 op order as the single-node oracle
-(`tsidx/oracle.py`) and the naive engine, so scores are bit-identical to
-both. Ties break by ascending doc_id. Pruning is safe: skipped groups have
-UB < θ ≤ final k-th score, and θ is established from ≥ k fully-scored docs.
+Safety. θ comes from k fully-scored docs, so the final k-th score is
+≥ θ; every doc of a skipped block scores ≤ ``UB_b`` < θ − ε < θ. Every
+kept block is scored exactly, so the page is exact.
 
-At 10^12 docs: block metadata is ~|q| rows per 2^20-doc range; the UB
+Why no MaxScore essential-term split (Turtle & Flood, IP&M 1995): with
+``UB_t = max_b bound(t, b)``, the non-essential terms are an
+ascending-``UB_t`` prefix with ``Σ UB_t < θ − ε``. A block holding no
+essential-term posting holds only non-essential terms, so its
+``UB_b = Σ bound(t, b) ≤ Σ_non-essential UB_t < θ − ε`` — the block
+bound already drops it. Requiring an essential posting on top would
+prune nothing more and cost a term-bound job and a per-(term, block)
+checkpoint.
+
+Rank identity: per-doc contributions accumulate in sorted-term order into
+a float64 dense array — the same IEEE754 op order as the single-node
+oracle (``tsidx/oracle.py``) and the JVM scoring path
+(``QueryEngine.bm25_scores``), so scores are bit-identical to both. Ties
+break by ascending doc_id. ``ε`` absorbs the nondeterministic partial-agg
+summation order of the UB doubles (relative slack 1e-9 ≫ ulp error):
+keeping a few extra borderline blocks is safe.
+
+At 10^12 docs the block metadata is ~|q| rows per 2^20-doc range; the UB
 aggregation shuffles only metadata and *stays a DataFrame* — the driver
 never materializes per-block rows. The only collects are bounded: the
-seed-block selection (``ORDER BY ub DESC LIMIT seed_factor·k`` — each block
-holds ≥ 1 candidate, so that prefix always covers the seed quota) and the
-k-row seed top-k. Survivors are selected by a broadcast **semi-join** of
-the candidate postings against ``ub_df.filter(ub ≥ θ − ε)``, so pruning
-scales past 10^6 blocks with no giant ``isin()`` literal in the plan.
-``ε`` absorbs the nondeterministic partial-agg summation order of the UB
-doubles (relative slack 1e-9 ≫ ulp error): keeping a few extra borderline
-blocks is safe; pruning stays exact because every kept block is scored
-exactly.
+|q| idfs, the seed selection (``ORDER BY ub DESC LIMIT _SEED_FACTOR·k``
+— each block holds ≥ 1 candidate, so that prefix always covers the seed
+quota) and the k-row seed page. Survivors are selected by a broadcast
+**semi-join** of the candidate postings against the UB frame, so
+pruning scales past 10^6 blocks with no giant ``isin()`` literal in the
+plan.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,9 +65,12 @@ from pyspark.sql import functions as F
 from tsidx.index import InvertedIndex
 from tsidx.oracle import bm25_idf
 
-__all__ = ["wand_topk", "wand_topk_batch"]
+__all__ = ["wand_topk", "maxscore_topk", "wand_topk_batch"]
 
 _SCORE_SCHEMA = "doc_id long, score double"
+
+#: the seed blocks cover at least this many times k candidate postings
+_SEED_FACTOR = 4
 
 
 def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
@@ -173,28 +190,20 @@ def _with_dead(cand: DataFrame, index: InvertedIndex) -> DataFrame:
     return cand.join(dead_by_block, "block_id", "left")
 
 
-@dataclass
-class _Prologue:
-    """What a single-query block-max ranker (WAND, MaxScore) prunes from."""
-
-    idfs: dict[str, float]
-    cand: DataFrame  # the query terms' posting blocks (+ ``_dead``)
-    scorer: Callable
-    idf_map: Column  # term -> idf literal map
-    bound_wtf: Column
-
-
-def _topk_prologue(index: InvertedIndex, query: str | list[str], k: int,
-                   small_candidate_limit: int) -> DataFrame | _Prologue:
-    """Shared opening of ``wand_topk`` and ``maxscore_topk``: driver-side
-    idfs (one |q|-row collect), the query terms' candidate blocks with
-    their tombstones, and the block scorer. Returns the final page when
-    that already answers the query (no known term, or few enough
-    candidates for the single-pass fast path)."""
+def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
+              small_candidate_limit: int = 200_000) -> DataFrame:
+    """The exact BM25 top-k ranker: (doc_id, score) ordered by
+    (-score, doc_id), bit-identical to the oracle. Block-max WAND
+    pruning (module docstring) once the query's Σ df exceeds
+    ``small_candidate_limit``; below it, one exact pass."""
     from tsidx.ship import ensure_shipped
     from tsidx.tokenize import query_terms
 
     spark = index.docs.sparkSession
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    if k == 0:
+        return spark.createDataFrame([], _SCORE_SCHEMA)
     ensure_shipped(spark)
     terms = query_terms(query)
     n = index.meta["n_docs"]
@@ -214,69 +223,56 @@ def _topk_prologue(index: InvertedIndex, query: str | list[str], k: int,
     # driver from the (|q|-row) terms fetch above; no extra job
     total_cand = sum(r["df"] for r in rows if r["term"] in idfs)
     if total_cand <= small_candidate_limit:
-        # fast path: below this size the seed/prune choreography (3 jobs)
-        # costs more than exactly scoring every candidate block in one pass
+        # fast path: below this size the seed/prune choreography costs more
+        # than exactly scoring every candidate block in one pass
         return (
             cand.groupBy("block_id")
             .applyInPandas(scorer, schema=_SCORE_SCHEMA)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-    idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
-    return _Prologue(idfs, cand, scorer, idf_map, _bound_wtf(k1, b, avgdl))
 
-
-def _seed_page(p: _Prologue, ub_df: DataFrame, k: int, seed_factor: int):
-    """Exactly score the highest-UB blocks covering ``seed_factor * k``
-    candidate postings. Returns ``(seed block ids, seed top-k rows,
-    seed page DataFrame)``; θ is the k-th seed score when the page is
-    full. Bounded collects only: every block carries >= 1 candidate
-    posting, so the ``seed_factor * k`` highest-UB blocks always cover
-    the seed quota."""
-    seed_rows = (
-        ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
-        .limit(seed_factor * k)
-        .collect()
-    )
-    seed_ids, seen = [], 0
-    for r in seed_rows:
-        seed_ids.append(r["block_id"])
-        seen += r["cand_count"]
-        if seen >= seed_factor * k:
-            break
-
-    seed_scores = (
-        p.cand.filter(F.col("block_id").isin(seed_ids))
-        .groupBy("block_id")
-        .applyInPandas(p.scorer, schema=_SCORE_SCHEMA)
-    )
-    seed_top = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    seed_df = p.cand.sparkSession.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in seed_top] or [], _SCORE_SCHEMA
-    )
-    return seed_ids, seed_top, seed_df
-
-
-def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
-              seed_factor: int = 4, small_candidate_limit: int = 200_000) -> DataFrame:
-    """Deterministic BM25 top-k with block-max pruning; returns
-    (doc_id, score) ordered by (-score, doc_id), bit-identical to the
-    oracle and to ``QueryEngine.bm25_topk``."""
-    p = _topk_prologue(index, query, k, small_candidate_limit)
-    if isinstance(p, DataFrame):
-        return p
-    cand = p.cand
     # per-block upper bounds — a metadata-only DataFrame (payload columns are
     # pruned from the scan); never collected in full. Eagerly checkpointed:
     # both the seed selection and the survivor filter read it, and the
     # checkpoint (~24 B/block, <= ~10^6 blocks at 10^12 docs) avoids
     # re-scanning the candidate metadata per consumer; blocks are freed by
     # the context cleaner when the frame is garbage-collected.
+    idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
     ub_df = cand.groupBy("block_id").agg(
-        F.sum(p.idf_map[F.col("term")] * p.bound_wtf).alias("ub"),
+        F.sum(idf_map[F.col("term")] * _bound_wtf(k1, b, avgdl)).alias("ub"),
         F.sum("block_df").alias("cand_count"),
     ).localCheckpoint()
-    seed_ids, seed_top, seed_df = _seed_page(p, ub_df, k, seed_factor)
+
+    # seed θ: exactly score the highest-UB blocks covering _SEED_FACTOR·k
+    # candidate postings. Every block carries >= 1 candidate posting, so
+    # the _SEED_FACTOR·k highest-UB blocks always cover that quota.
+    seed_rows = (
+        ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
+        .limit(_SEED_FACTOR * k)
+        .collect()
+    )
+    seed_ids, seen = [], 0
+    for r in seed_rows:
+        seed_ids.append(r["block_id"])
+        seen += r["cand_count"]
+        if seen >= _SEED_FACTOR * k:
+            break
+    seed_top = (
+        cand.filter(F.col("block_id").isin(seed_ids))
+        .groupBy("block_id")
+        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+        .collect()
+    )
+    seed_df = spark.createDataFrame(
+        [(r["doc_id"], r["score"]) for r in seed_top], _SCORE_SCHEMA
+    )
+
+    # survivors: non-seed blocks with UB >= θ − ε, broadcast semi-joined
+    # (no isin() literal of survivor ids); without a full seed page there
+    # is no θ and every other block survives
     survivors = ub_df.filter(~F.col("block_id").isin(seed_ids))
     if len(seed_top) >= k:
         theta = seed_top[k - 1]["score"]
@@ -289,13 +285,17 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     rest = (
         cand.join(F.broadcast(survivors.select("block_id")), "block_id", "semi")
         .groupBy("block_id")
-        .applyInPandas(p.scorer, schema=_SCORE_SCHEMA)
+        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
     )
     return (
         seed_df.unionByName(rest)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
+
+
+#: ``tsidx.wand.maxscore_topk`` — the same ranker under its MaxScore name
+maxscore_topk = wand_topk
 
 
 _BATCH_SCORE_SCHEMA = "query_id string, doc_id long, score double"
@@ -305,11 +305,10 @@ def wand_topk_batch(
     index: InvertedIndex,
     queries: dict[str, str | list[str]],
     k: int,
-    seed_factor: int = 4,
 ) -> DataFrame:
     """Block-max WAND for a *batch* of queries: per-query top-k
     (query_id, doc_id, score), each page bit-identical to the per-query
-    ``wand_topk`` / naive plan.
+    ``wand_topk`` and to ``QueryEngine.bm25_topk_batch``.
 
     One metadata+payload scan covers the union of all queries' terms; the
     per-(query, block) upper bounds are ONE metadata-only aggregation over
@@ -322,7 +321,7 @@ def wand_topk_batch(
     so WAND-batch wins when pruning discards most blocks (hot terms,
     small k), naive-batch when queries are selective anyway.
 
-    Driver-side work stays bounded by |Q|·seed_factor·k rows (seed
+    Driver-side work stays bounded by |Q|·_SEED_FACTOR·k rows (seed
     selection + seed pages); everything else is DataFrame-shaped exactly
     like the single-query engine.
     """
@@ -385,7 +384,7 @@ def wand_topk_batch(
         .localCheckpoint()
     )
 
-    # bounded per-query seed selection (|Q| * seed_factor * k rows)
+    # bounded per-query seed selection (|Q| * _SEED_FACTOR * k rows)
     from pyspark.sql import Window
 
     w_seed = Window.partitionBy("query_id").orderBy(
@@ -393,14 +392,14 @@ def wand_topk_batch(
     )
     seed_rows = (
         ub_df.withColumn("rn", F.row_number().over(w_seed))
-        .filter(F.col("rn") <= seed_factor * kk)
+        .filter(F.col("rn") <= _SEED_FACTOR * kk)
         .collect()
     )
     seed_pairs: list[tuple[str, int]] = []
     seen: dict[str, int] = {}
     for r in sorted(seed_rows, key=lambda r: (r["query_id"], r["rn"])):
         qid = r["query_id"]
-        if seen.get(qid, 0) >= seed_factor * kk:
+        if seen.get(qid, 0) >= _SEED_FACTOR * kk:
             continue
         seed_pairs.append((qid, r["block_id"]))
         seen[qid] = seen.get(qid, 0) + r["cand_count"]
