@@ -410,15 +410,13 @@ def _q_percolate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact top-k ranker (tsidx/wand.py) on its prune path — exact by
-    construction (safe pruning), so it shares bm25_topk's oracle SQL.
-    ``small_candidate_limit=0`` forces the seed/prune path so the
-    correctness gate exercises the pruning machinery, not the fast
-    path."""
+    """The exact top-k ranker called directly (tsidx/wand.py), not through
+    ``QueryEngine`` — one block-grouped scoring pass, so it shares
+    bm25_topk's oracle SQL."""
     from tsidx.wand import wand_topk
 
     idx = get_index(spark, sf_dir)
-    return wand_topk(idx, Q_BM25, Q_BM25_K, small_candidate_limit=0).select(
+    return wand_topk(idx, Q_BM25, Q_BM25_K).select(
         F.col("doc_id").cast("long"), F.round("score", 4).alias("score_r")
     )
 
@@ -446,9 +444,11 @@ def _q_bm25_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_wand_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched block-max WAND — per-query pruning over one shared
-    metadata scan; bit-identical to the naive batch by construction, so
-    it shares bm25_topk_multi's oracle."""
+    """Batched block-grouped scorer (tsidx/wand.py::wand_topk_batch):
+    one scan of the union of the queries' terms, each block scored once
+    per query that uses it, per-query top-k by ``row_number``;
+    bit-identical to the naive batch by construction, so it shares
+    bm25_topk_multi's oracle."""
     from tsidx.wand import wand_topk_batch
 
     idx = get_index(spark, sf_dir)
@@ -842,9 +842,13 @@ def _bpe_chain_cte(n_rounds: int) -> str:
     chr(31) sym chr(30) per symbol — so a merge is ONE literal
     ``replace()``, whose left-to-right non-overlapping semantics match
     the engine's merge loop exactly (tsidx/bpe.py _merge_batch_fn /
-    _train_bpe_driver). Early stop: m{i} is empty below BPE_MIN_PAIR and
-    the emptiness cascades through the cross joins, like the engine's
-    break."""
+    _train_bpe_driver). Early stop: m{i} is empty below BPE_MIN_PAIR; the
+    LEFT JOIN then carries v{i-1} through unchanged (a NULL replace falls
+    back to the old string), so every later round sees the same pair
+    counts and stays empty too, like the engine's break. Each v{i} is
+    MATERIALIZED: DuckDB otherwise inlines CTEs, and round i reads v{i-1}
+    twice (pair counts and the replace), so the plan would double every
+    round (~75 s to plan 10 rounds even on a 4-row table)."""
     syms = (
         "regexp_extract_all(s, chr(31) || '([^' || chr(30) || ']+)' "
         "|| chr(30), 1)"
@@ -855,7 +859,7 @@ def _bpe_chain_cte(n_rounds: int) -> str:
     FROM documents
   ) WHERE word <> '' GROUP BY word
 ),
-v0 AS (
+v0 AS MATERIALIZED (
   SELECT word, n,
          chr(31) || array_to_string(regexp_split_to_array(word, ''),
                                     chr(30) || chr(31))
@@ -876,12 +880,12 @@ m{i} AS (
   SELECT a, b, cnt FROM p{i} WHERE cnt >= {BPE_MIN_PAIR}
   ORDER BY cnt DESC, a, b LIMIT 1
 ),
-v{i} AS (
+v{i} AS MATERIALIZED (
   SELECT v.word, v.n,
-         replace(v.s,
-                 chr(31) || m.a || chr(30) || chr(31) || m.b || chr(30),
-                 chr(31) || m.a || m.b || chr(30)) AS s
-  FROM v{p} v CROSS JOIN m{i} m
+         coalesce(replace(v.s,
+                          chr(31) || m.a || chr(30) || chr(31) || m.b || chr(30),
+                          chr(31) || m.a || m.b || chr(30)), v.s) AS s
+  FROM v{p} v LEFT JOIN m{i} m ON true
 )"""
     return sql
 
@@ -3221,17 +3225,13 @@ def _q_contains_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``tsidx.wand.maxscore_topk``, the ranker's MaxScore name — exact
-    by construction (safe pruning: skipped blocks' upper bounds sum below
-    θ), so it shares bm25_topk's oracle SQL.
-    ``small_candidate_limit=0`` forces the seed/prune path so the gate
-    exercises the pruning machinery, not the fast path."""
+    """``tsidx.wand.maxscore_topk``, the ranker's MaxScore name — the
+    same exact block-grouped pass as ``wand_topk``, so it shares
+    bm25_topk's oracle SQL."""
     from tsidx.wand import maxscore_topk
 
     idx = get_index(spark, sf_dir)
-    return maxscore_topk(
-        idx, Q_BM25, Q_BM25_K, small_candidate_limit=0
-    ).select(
+    return maxscore_topk(idx, Q_BM25, Q_BM25_K).select(
         F.col("doc_id").cast("long"), F.round("score", 4).alias("score_r")
     )
 

@@ -97,7 +97,7 @@ def main() -> None:
         timings[name] = lat[len(lat) // 2]
         best[name] = lat[0]
 
-    # the exact top-k ranker (block-max WAND) at the larger index
+    # the exact top-k ranker (block-grouped single pass) at the larger index
     p50("bm25_topk", lambda: eng.bm25_topk("customer query merge", 25).collect())
 
     docs_flat = transcripts.select(

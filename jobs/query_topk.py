@@ -4,9 +4,10 @@
         --parallelism 8
 
 ``--mode topk`` runs the one exact BM25 top-k ranker (``bm25_topk``,
-block-max WAND, tsidx.wand). ``--engine`` picks the ``--mode batch``
-plan: ``wand`` (per-query block pruning, ``wand_topk_batch``) or
-``naive`` (one shared scan, ``bm25_topk_batch``) — rank- and
+one block-grouped scoring pass, tsidx.wand). ``--engine`` picks the
+``--mode batch`` plan: ``wand`` (the block-grouped batch scorer,
+``wand_topk_batch``; wins on broad batches) or ``naive`` (one shared JVM
+scan, ``bm25_topk_batch``; wins on selective batches) — rank- and
 score-identical by construction.
 ``--mode match`` runs the reference's disjunctive boolean retrieval instead
 (results in docID order, ``ts_type_filter/inverted_index.py:71-101``).

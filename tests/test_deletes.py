@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsidx.build import build_index
 from tsidx.deletes import apply_deletes, delete_docs
@@ -62,17 +63,21 @@ def test_logical_delete_keeps_surviving_scores(built, deleted):
 
 
 def test_wand_theta_not_seeded_by_deleted_docs(built, deleted):
-    """WAND stays rank-identical to the naive plan under tombstones, even
-    when the highest-scoring docs are the deleted ones."""
+    """The ranker stays rank-identical to the JVM scoring plan under
+    tombstones, even when the highest-scoring docs are the deleted ones:
+    the scorer masks them before each block's local top-k."""
+    from tsidx.wand import wand_topk
+
     eng = QueryEngine(deleted)
     for q in ["fire heat", "love beauty time", "same"]:
-        naive = [(r["doc_id"], r["score"]) for r in eng.bm25_topk(q, 10).collect()]
-        from tsidx.wand import wand_topk
-
-        wand = [
+        naive = [
             (r["doc_id"], r["score"])
-            for r in wand_topk(deleted, q, 10, small_candidate_limit=0).collect()
+            for r in eng.bm25_scores(q)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(10)
+            .collect()
         ]
+        wand = [(r["doc_id"], r["score"]) for r in wand_topk(deleted, q, 10).collect()]
         assert wand == naive
 
 

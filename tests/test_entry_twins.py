@@ -80,3 +80,34 @@ def test_sdm_twin_repeated_bigram_multiplicity(spark, entry):
     assert got.keys() == want.keys()
     for d in want:
         assert _norm(got[d]) == _norm(want[d]), d
+
+
+def test_bpe_token_counts_twin_after_early_stop(spark, entry):
+    """On a corpus too small for BPE_MERGES merges, training stops early;
+    the twin must segment with the shorter merge table, as the engine
+    does (before the fix an empty round emptied every later round, and
+    the twin reported zero words and pieces for every doc)."""
+    import duckdb
+
+    from tsidx.bpe import bpe_segment, train_bpe
+
+    texts = ["ab ab cd", "ab xy", "xy", "abcd ab"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    merges = train_bpe(docs, entry.BPE_MERGES)
+    assert 0 < len(merges) < entry.BPE_MERGES
+    got = sorted(
+        (r["doc_id"], r["n_words"], r["n_pieces"])
+        for r in bpe_segment(docs, merges).collect()
+    )
+
+    con = duckdb.connect()
+    values = ", ".join(f"({i}, '{t}')" for i, t in enumerate(texts))
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM (VALUES {values}) AS t(doc_id, text)"
+    )
+    want = sorted(
+        tuple(int(x) for x in r)
+        for r in con.execute(entry._bpe_token_counts_sql()).fetchall()
+    )
+    assert got == want
+    assert all(n_words > 0 for _, n_words, _ in want)

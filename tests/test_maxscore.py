@@ -1,6 +1,6 @@
 """``maxscore_topk`` (the ranker's MaxScore name) rank-identity tests: vs
 the JVM ``bm25_scores`` plan vs the oracle, plus a rare-term + stopwords
-query on the prune path."""
+query."""
 
 from __future__ import annotations
 
@@ -32,16 +32,13 @@ def built(spark, sonnets_transcripts, sonnets):
     return idx, oracle
 
 
-@pytest.mark.parametrize("limit", [0, 200_000], ids=["pruned-path", "fast-path"])
 @pytest.mark.parametrize("query", QUERIES)
 @pytest.mark.parametrize("k", [1, 10, 200])
-def test_maxscore_rank_identical_to_oracle(built, query, k, limit):
+def test_maxscore_rank_identical_to_oracle(built, query, k):
     idx, oracle = built
     got = [
         (r["doc_id"], r["score"])
-        for r in maxscore_topk(
-            idx, query, k, small_candidate_limit=limit
-        ).collect()
+        for r in maxscore_topk(idx, query, k).collect()
     ]
     want = oracle.bm25_topk(query, k)
     assert [d for d, _ in got] == [d for d, _ in want]
@@ -51,8 +48,6 @@ def test_maxscore_rank_identical_to_oracle(built, query, k, limit):
 
 @pytest.mark.parametrize("query", ["fire heat", "thrall the and of"])
 def test_maxscore_matches_naive_and_wand(built, query):
-    from tsidx.wand import wand_topk
-
     idx, _ = built
     eng = QueryEngine(idx)
     naive = [
@@ -64,19 +59,15 @@ def test_maxscore_matches_naive_and_wand(built, query):
     ]
     ms = [
         (r["doc_id"], r["score"])
-        for r in maxscore_topk(idx, query, 25, small_candidate_limit=0).collect()
+        for r in maxscore_topk(idx, query, 25).collect()
     ]
-    wd = [
-        (r["doc_id"], r["score"])
-        for r in wand_topk(idx, query, 25, small_candidate_limit=0).collect()
-    ]
-    assert naive == ms == wd
+    assert naive == ms
 
 
 def test_maxscore_prunes_stopword_terms(spark):
     """On a corpus where one rare term dominates and stopwords are cheap,
-    the prune path returns exactly the rare-term docs: blocks without the
-    rare term have upper bounds below θ."""
+    the ranker returns exactly the rare-term docs, and its page equals the
+    JVM scoring plan's."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
@@ -96,9 +87,7 @@ def test_maxscore_prunes_stopword_terms(spark):
     idx = build_index(df, block_size=16)
     got = [
         (r["doc_id"], r["score"])
-        for r in maxscore_topk(
-            idx, "zzrare the and of", 5, small_candidate_limit=0
-        ).collect()
+        for r in maxscore_topk(idx, "zzrare the and of", 5).collect()
     ]
     # ground truth: exactly the 8 marker docs can score above pure-filler
     # docs (idf of filler terms is ~0 at df≈n); top-5 are marker docs

@@ -1,5 +1,6 @@
-"""Randomized (seeded) corpus: oracle, naive plan, and WAND must agree on
-every query — broad-spectrum rank-identity beyond the golden corpora."""
+"""Randomized (seeded) corpus: oracle, JVM scoring plan, and the top-k
+rankers must agree on every query — broad-spectrum rank-identity beyond
+the golden corpora."""
 
 from __future__ import annotations
 
@@ -67,25 +68,17 @@ def test_random_queries_rank_identical(built):
             .limit(k)
             .collect()
         ]
-        got_w = [
-            (r["doc_id"], r["score"])
-            for r in wand_topk(idx, q, k, small_candidate_limit=0).collect()
-        ]
         want = oracle.bm25_topk(q, k)
-        assert got_n == want, (q, k, "naive")
-        assert got_w == want, (q, k, "wand")
+        assert got_n == want, (q, k, "bm25_topk")
         assert got_s == want, (q, k, "bm25_scores")
 
 
 def test_topk_k_zero_and_negative(built):
-    """k == 0 is an empty page and k < 0 an error, on the prune path and
-    on the fast path alike."""
+    """k == 0 is an empty page and k < 0 an error."""
     idx, _ = built
-    for limit in (0, 200_000):
-        got = wand_topk(idx, "fire running", 0, small_candidate_limit=limit)
-        assert got.collect() == [], limit
-        with pytest.raises(ValueError):
-            wand_topk(idx, "fire running", -1, small_candidate_limit=limit)
+    assert wand_topk(idx, "fire running", 0).collect() == []
+    with pytest.raises(ValueError):
+        wand_topk(idx, "fire running", -1)
 
 
 def test_random_dictionary_expansion_modes(built):
@@ -237,6 +230,51 @@ def test_random_batch_matches_per_query(built):
         want = oracle.bm25_topk(q, k)
         rows = sorted(got.get(qid, []), key=lambda t: (-t[1], t[0]))
         assert rows == [(d, s) for d, s in want], (qid, q)
+
+
+def test_batch_topk_with_tombstones_and_k_guard(built, spark):
+    """Both batch top-k plans under tombstones == the per-query oracle
+    page with the deleted docs removed. ``k == 0`` is an empty page before
+    any Spark job runs, and ``k < 0`` an error, as in ``wand_topk``."""
+    from tsidx.deletes import delete_docs
+    from tsidx.wand import wand_topk_batch
+
+    idx, oracle = built
+    rng = random.Random(5)
+    batch = {
+        f"q{i}": " ".join(rng.choices(WORDS, k=rng.randint(1, 4)))
+        for i in range(6)
+    }
+    k = 7
+    # the top hits of every query, so deletes reach into each page
+    deleted = sorted({d for q in batch.values() for d, _ in oracle.bm25_topk(q, 3)})
+    idx2 = delete_docs(idx, deleted)
+    eng = QueryEngine(idx2)
+    for name, run in (("bm25_topk_batch", eng.bm25_topk_batch),
+                      ("wand_topk_batch", lambda b, kk: wand_topk_batch(idx2, b, kk))):
+        got: dict = {}
+        for r in run(batch, k).collect():
+            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for qid, q in batch.items():
+            want = [
+                (d, s) for d, s in oracle.bm25_topk(q, 10_000) if d not in deleted
+            ][:k]
+            rows = sorted(got.get(qid, []), key=lambda t: (-t[1], t[0]))
+            assert rows == want, (name, qid, q)
+
+        sc = spark.sparkContext
+        group = f"k-zero-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            page = run(batch, 0)
+        finally:  # SparkContext has no clearJobGroup
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert page.collect() == [], name
+        with pytest.raises(ValueError):
+            run(batch, -1)
 
 
 def test_random_proximity_matches_bruteforce(built, spark):

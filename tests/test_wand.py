@@ -1,5 +1,5 @@
-"""Block-max WAND rank-identity tests: the ranker vs the JVM
-``bm25_scores`` plan vs the oracle."""
+"""Top-k ranker (``tsidx.wand``) rank-identity tests: the ranker vs the
+JVM ``bm25_scores`` plan vs the oracle."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from tsidx.build import build_index
 from tsidx.oracle import OracleIndex
 from tsidx.query import QueryEngine
-from tsidx.wand import _SEED_FACTOR, wand_topk
+from tsidx.wand import wand_topk
 
 QUERIES = [
     "same",
@@ -30,15 +30,11 @@ def built(spark, sonnets_transcripts, sonnets):
     return idx, oracle
 
 
-@pytest.mark.parametrize("limit", [0, 200_000], ids=["pruned-path", "fast-path"])
 @pytest.mark.parametrize("query", QUERIES)
 @pytest.mark.parametrize("k", [1, 10, 200])
-def test_wand_rank_identical_to_oracle(built, query, k, limit):
+def test_wand_rank_identical_to_oracle(built, query, k):
     idx, oracle = built
-    got = [
-        (r["doc_id"], r["score"])
-        for r in wand_topk(idx, query, k, small_candidate_limit=limit).collect()
-    ]
+    got = [(r["doc_id"], r["score"]) for r in wand_topk(idx, query, k).collect()]
     want = oracle.bm25_topk(query, k)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (d1, s1), (d2, s2) in zip(got, want):
@@ -61,10 +57,10 @@ def test_wand_matches_naive_plan(built, query):
 
 
 def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
-    """Survivor selection must stay a DataFrame plan: with >= 10^4 posting
-    blocks, no single driver collect during wand_topk may return more than
-    O(_SEED_FACTOR * k) rows (regression: per-block metadata collect + giant
-    isin() survivor literal)."""
+    """Scoring must stay a DataFrame plan: with >= 10^4 posting blocks, no
+    single driver collect during wand_topk may return a data-scale number
+    of rows (regression: per-block metadata collect + giant isin()
+    literal)."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
@@ -94,13 +90,11 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     monkeypatch.setattr(df_cls, "collect", spy_collect)
     got = [
         (r["doc_id"], r["score"])
-        for r in real_collect(
-            wand_topk(idx, "fire heat", k, small_candidate_limit=0)
-        )
+        for r in real_collect(wand_topk(idx, "fire heat", k))
     ]
     monkeypatch.undo()
     assert collected_sizes, "expected bounded driver collects"
-    cap = max(_SEED_FACTOR * k, 64)  # terms fetch + seed rows + seed top-k
+    cap = 64  # the |q|-row terms fetch
     assert max(collected_sizes) <= cap, collected_sizes
 
     oracle = OracleIndex()
@@ -191,7 +185,7 @@ class TestWandBatch:
         for qid, q in batch.items():
             want = [
                 (r["doc_id"], r["score"])
-                for r in wand_topk(idx2, q, 5, small_candidate_limit=0).collect()
+                for r in wand_topk(idx2, q, 5).collect()
             ]
             rows = sorted(got.get(qid, []), key=lambda t: (-t[1], t[0]))
             assert rows == want, qid

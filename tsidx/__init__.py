@@ -13,7 +13,8 @@ Capabilities mirror the reference library ``retaildevcrews/ts_type_filter``
   `tsidx.compress`);
 - query: disjunctive match (reference ``Index.match`` semantics,
   ``inverted_index.py:71-101``) and exact BM25 top-k with deterministic
-  tie-breaking, one block-max WAND ranker (`tsidx.query`, `tsidx.wand`);
+  tie-breaking, one block-grouped single-pass ranker (`tsidx.query`,
+  `tsidx.wand`);
 - a single-node oracle faithful to the reference used as rank-identity ground
   truth (`tsidx.oracle`);
 - driver-side type-filter parity layer (parser / filter / normalizer /

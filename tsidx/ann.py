@@ -698,7 +698,7 @@ def mmr_rerank(
 
     Physical shape: ONE distributed scoring scan against the broadcast
     query TakeOrdereds the ``fetch_k`` candidate ids (the same
-    bounded-collect contract as WAND's θ-seed — fetch_k is a constant,
+    bounded-collect contract as the top-k rankers — fetch_k is a constant,
     never data-scale); their embeddings are then fetched with a pushed
     ``id IN`` filter (row-group-prunable — never a second full-corpus
     join). The greedy selection is inherently sequential (each pick

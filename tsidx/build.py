@@ -17,12 +17,9 @@ Design notes for 10^12-turn scale:
   joins, not aggregations, so this manual salt is required (SURVEY §2.4 N4).
 - Blocks are docID-contiguous, so the global posting list of a term is the
   concatenation of its blocks in block_id order — merge is free.
-- Block metadata (min/max doc, max tf, min dl) is computed JVM-side in the
-  same aggregation; WAND derives a safe per-block score bound from it at
-  query time (the BM25 tf/length factor is monotone increasing in tf and
-  decreasing in dl, so wtf(max_tf, min_dl) bounds every doc in the block).
-  Storing (max_tf, min_dl) instead of a precomputed bound keeps the build
-  independent of global stats (avgdl), which is what makes per-shard
+- Block metadata (min/max doc, max tf, min dl, sum tf) is computed JVM-side
+  in the same aggregation; fsck checks it, term pruning and deletes rewrite it.
+  It holds no global stats (avgdl), which is what makes per-shard
   checkpointed builds single-pass and shards mergeable (tsidx.resume).
 - idf is *not* materialized: it needs only (N, df) and is computed on the
   driver at query time with CPython ``math.log`` so that engine scores are
@@ -230,7 +227,7 @@ def postings_from_tokens(tokens: DataFrame, block_size: int) -> DataFrame:
     The ``doc_id // block_size`` grouping is simultaneously the row-size cap,
     the Zipf-hot-term salt (a df≈N term splits across N/block_size groups —
     AQE skew handling covers joins, not aggregations, SURVEY §2.4 N4), and
-    the WAND block unit.
+    the top-k ranker's scoring group.
     """
     blocks = (
         tokens.withColumn("block_id", F.expr(f"doc_id DIV {int(block_size)}"))

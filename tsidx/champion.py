@@ -12,11 +12,11 @@ without being in ANY query term's champion list is missed (with ``m >=
 k`` a single-term query is EXACT — every top-k doc is by definition in
 the term's top-k by wtf).
 
-This complements the engine's dynamic pruning (WAND's block bounds,
-MaxScore's term bounds): those are exact and adaptive; champion lists
-are the cheap static tier you probe first, falling back to the exact
-engine when the tier's result is not safe (e.g. fewer than k docs, or a
-downstream quality gate fails).
+This complements the engine's exact top-k ranker (``tsidx.wand``, one
+block-grouped scoring pass): champion lists are the cheap static tier
+you probe first, falling back to the exact engine when the tier's result
+is not safe (e.g. fewer than k docs, or a downstream quality gate
+fails).
 
 Artifact shape: ``(term, doc_id, tf, dl)`` — vocabulary x m rows,
 built by ONE full-index decode + a per-term rank window whose

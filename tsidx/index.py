@@ -9,7 +9,7 @@ An index is four tables plus scalar metadata:
                   docID-range shards (``block_id = doc_id // block_size``):
                   they bound row size (no 2 GB array cells at 10^12 docs),
                   split Zipf-hot terms across groups (skew salt, SURVEY §2.4
-                  N4), and carry block-max metadata for WAND pruning;
+                  N4), and are the top-k ranker's scoring groups;
 - ``terms``     — (term, df) global document frequencies;
 - ``manifest``  — per-build-partition lineage + metrics rows (SURVEY §2.4 N5).
 
@@ -224,8 +224,8 @@ def merge_indexes(a: "InvertedIndex", b: "InvertedIndex") -> "InvertedIndex":
     posting table is the plain union — no per-term list splicing, no
     re-encode, no shuffle of posting bytes. Validates the invariants that
     make that true: identical block_size/codec, and no block_id owned by
-    both sides (which also guarantees WAND's one-group-per-block scoring
-    assumption survives the merge). Corpus stats (n_docs, total_tokens,
+    both sides (which also guarantees the ranker's one-group-per-block
+    scoring assumption survives the merge). Corpus stats (n_docs, total_tokens,
     avgdl) recombine exactly; the terms table is re-aggregated from block
     metadata columns only.
     """

@@ -7,8 +7,8 @@ Semantics bound to the reference:
   (``/root/reference/ts_type_filter/inverted_index.py:71-101``).
 - ``bm25_topk`` (alias ``wand_topk``, ``maxscore_topk``) — the canonical
   BM25 spec of SURVEY §7.3, answered by the one exact top-k ranker
-  :func:`tsidx.wand.wand_topk` (block-max WAND pruning); ties break by
-  ascending doc_id.
+  :func:`tsidx.wand.wand_topk` (one block-grouped scoring pass with a
+  local top-k per block); ties break by ascending doc_id.
 - ``bm25_scores`` — every candidate doc's score as a JVM plan, the base of
   the filtered, paged, decayed, grouped and batched variants. Scores are
   bit-identical to :class:`tsidx.oracle.OracleIndex` and to the ranker: idf
@@ -269,10 +269,9 @@ class QueryEngine:
         production engine exposes (cf. Lucene/ES ``explain``).
 
         Physical shape: ``bm25_topk`` runs first and its k docIDs (a
-        bounded, k-sized collect — same contract as WAND's θ-seed) are
-        re-planted as a ``doc_id IN`` filter over the already-decoded
-        posting rows of the query's terms; nothing data-scale ever
-        reaches the driver.
+        bounded, k-sized collect) are re-planted as a ``doc_id IN``
+        filter over the already-decoded posting rows of the query's
+        terms; nothing data-scale ever reaches the driver.
         """
         terms = self.terms_of(query)
         idfs = self.query_idfs(terms)
@@ -781,18 +780,24 @@ class QueryEngine:
         query_id exchange (verified in PLANS.md), so each map-side
         partition forwards at most k rows per query and a hot query
         cannot skew the final exchange — all JVM-side, no Arrow round
-        trip of the full score set.
+        trip of the full score set. ``k == 0`` is an empty page and
+        ``k < 0`` an error, as in :func:`tsidx.wand.wand_topk`.
         """
         from pyspark.sql import Window
 
-        kk = int(k)
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
+        if k == 0:
+            return self.index.docs.sparkSession.createDataFrame(
+                [], "query_id string, doc_id long, score double"
+            )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
         return (
             self.bm25_scores_batch(queries)
             .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= kk)
+            .filter(F.col("rn") <= int(k))
             .drop("rn")
         )
 
