@@ -15,7 +15,7 @@
     # Carmel impact pruning: keep postings scoring >= lam x the term max
     python jobs/maintain_index.py prune --index /tmp/idx --impact-lam 0.6
 
-    # snapshot read at a shard commit (resumable-layout indexes)
+    # snapshot read at a shard (resumable) or batch (streaming) commit
     python jobs/maintain_index.py snapshot --index /tmp/ridx --at-shard 1
 
     # integrity check (exit 2 when any invariant fails)
@@ -119,14 +119,9 @@ def main() -> None:
     if args.action == "snapshot":
         if args.at_shard is None:
             raise SystemExit("snapshot requires --at-shard K")
-        if os.path.exists(os.path.join(args.index, "stream_state.json")):
-            from tsidx.streaming import read_stream_index_at
+        from tsidx.resume import read_index_at
 
-            snap = read_stream_index_at(spark, args.index, args.at_shard)
-        else:
-            from tsidx.resume import read_index_at
-
-            snap = read_index_at(spark, args.index, args.at_shard)
+        snap = read_index_at(spark, args.index, args.at_shard)
         stats = snap.statistics()
         out = {
             "job": "snapshot",

@@ -1,10 +1,12 @@
-"""Shared fixtures: sonnets golden corpus, SparkSession, transcript tables."""
+"""Shared fixtures: sonnets golden corpus, a seeded stand-in corpus of the
+same shape, SparkSession, transcript tables."""
 
 from __future__ import annotations
 
 import datetime
 import importlib.util
 import os
+import random
 
 import pytest
 
@@ -28,6 +30,35 @@ def sonnets() -> list[str]:
     if corpus is None:
         pytest.skip("reference sonnets corpus not available")
     return corpus
+
+
+# Zipf-ranked stand-in vocabulary: function words at the head, the words
+# the equivalence tests query in the middle, synthetic stems in the tail;
+# surface variants (case, punctuation, suffixes) exercise the tokenizer
+STANDIN_WORDS = (
+    "the and to of my i in that thy with love thou me is not but for his "
+    "be so all as fire heat time beauty eyes same loving loves Love, fire! "
+    "heat's eyes; thrall quench burning burns sweet doth hath "
+    "O summer's day rose 'tis don't"
+).split() + [f"tw{i}" for i in range(400)]
+
+
+def make_standin_texts(seed: int = 20261019, n_docs: int = 154) -> list[str]:
+    """A seeded 154-text corpus the size and shape of the sonnets (Zipf
+    word frequencies, 60-130 tokens per text): needs no download, so the
+    tests that only compare two engine paths, or the engine with the
+    oracle, run without the reference corpus."""
+    rng = random.Random(seed)
+    weights = [1.0 / (r + 1) for r in range(len(STANDIN_WORDS))]
+    return [
+        " ".join(rng.choices(STANDIN_WORDS, weights, k=rng.randint(60, 130)))
+        for _ in range(n_docs)
+    ]
+
+
+@pytest.fixture(scope="session")
+def standin_texts() -> list[str]:
+    return make_standin_texts()
 
 
 @pytest.fixture(scope="session")
@@ -79,6 +110,18 @@ TRANSCRIPT_SCHEMA = (
 @pytest.fixture(scope="session")
 def sonnets_transcripts(spark, sonnets):
     df = spark.createDataFrame(sonnets_transcript_rows(sonnets), TRANSCRIPT_SCHEMA)
+    df = df.repartition(8).cache()
+    df.count()
+    return df
+
+
+@pytest.fixture(scope="session")
+def standin_transcripts(spark, standin_texts):
+    """The stand-in corpus in the sonnets' transcript mapping (same conv_id
+    / turn_idx layout, so tests move between the two unchanged)."""
+    df = spark.createDataFrame(
+        sonnets_transcript_rows(standin_texts), TRANSCRIPT_SCHEMA
+    )
     df = df.repartition(8).cache()
     df.count()
     return df

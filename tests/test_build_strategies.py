@@ -22,9 +22,9 @@ def _blocks(idx):
     )
 
 
-def test_fused_equals_explode(spark, sonnets_transcripts):
-    fused = build_index(sonnets_transcripts, block_size=32, strategy="fused")
-    explode = build_index(sonnets_transcripts, block_size=32, strategy="explode")
+def test_fused_equals_explode(spark, standin_transcripts):
+    fused = build_index(standin_transcripts, block_size=32, strategy="fused")
+    explode = build_index(standin_transcripts, block_size=32, strategy="explode")
     assert _blocks(fused) == _blocks(explode)
     assert fused.meta["total_tokens"] == explode.meta["total_tokens"]
     assert fused.meta["avgdl"] == explode.meta["avgdl"]

@@ -27,6 +27,12 @@ def deleted(built):
     return delete_docs(built, DELETED)
 
 
+@pytest.fixture(scope="module")
+def standin_deleted(spark, standin_transcripts):
+    built = build_index(standin_transcripts, block_size=64, num_partitions=4)
+    return delete_docs(built, DELETED)
+
+
 def test_logical_delete_filters_all_query_paths(deleted, sonnets):
     eng = QueryEngine(deleted)
     gone = set(DELETED)
@@ -81,12 +87,12 @@ def test_wand_theta_not_seeded_by_deleted_docs(built, deleted):
         assert wand == naive
 
 
-def test_apply_deletes_equals_fresh_build(spark, deleted, sonnets):
-    applied = apply_deletes(deleted)
+def test_apply_deletes_equals_fresh_build(spark, standin_deleted, standin_texts):
+    applied = apply_deletes(standin_deleted)
     assert applied.tombstones is None
 
     survivors = [
-        (i, s) for i, s in enumerate(sonnets) if i not in set(DELETED)
+        (i, s) for i, s in enumerate(standin_texts) if i not in set(DELETED)
     ]
     oracle = OracleIndex()
     for doc_id, text in survivors:

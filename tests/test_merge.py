@@ -51,18 +51,22 @@ def build_with_base(spark, texts, prefix, base, block_size=32):
     return InvertedIndex(docs=docs, postings=postings, terms=terms, meta=meta)
 
 
-@pytest.fixture(scope="module")
-def merged_and_whole(spark, sonnets):
-    first, second = sonnets[:64], sonnets[64:]  # 64 = multiple of block 32
+def _merged_and_whole(spark, texts):
+    first, second = texts[:64], texts[64:]  # 64 = multiple of block 32
     a = build_with_base(spark, first, "a", 0)
     b = build_with_base(spark, second, "b", 64)  # block-aligned offset
     merged = merge_indexes(a, b)
-    whole = build_index(_df(spark, sonnets, "a"), block_size=32)
+    whole = build_index(_df(spark, texts, "a"), block_size=32)
     return merged, whole
 
 
-def test_merged_stats_equal_whole(merged_and_whole):
-    merged, whole = merged_and_whole
+@pytest.fixture(scope="module")
+def merged_and_whole(spark, sonnets):
+    return _merged_and_whole(spark, sonnets)
+
+
+def test_merged_stats_equal_whole(spark, standin_texts):
+    merged, whole = _merged_and_whole(spark, standin_texts)
     assert merged.statistics() == whole.statistics()
     assert merged.meta["avgdl"] == whole.meta["avgdl"]
     t1 = sorted(tuple(r) for r in merged.terms.collect())

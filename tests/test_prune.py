@@ -14,6 +14,11 @@ def built(spark, sonnets_transcripts):
 
 
 @pytest.fixture(scope="module")
+def standin_built(spark, standin_transcripts):
+    return build_index(standin_transcripts, block_size=64, num_partitions=4)
+
+
+@pytest.fixture(scope="module")
 def oracle(sonnets):
     o = OracleIndex()
     o.add_corpus(sonnets)
@@ -174,14 +179,14 @@ def test_prune_by_impact_scores_and_recall(built, oracle):
         impact_kept_rows(eng, 0.0)
 
 
-def test_fsck_green_after_impact_prune(built):
+def test_fsck_green_after_impact_prune(standin_built):
     """Impact pruning keeps dictionary df / total_tokens as-built by
     design; fsck must read the pruned_impact_lam marker and report the
     pruned index healthy instead of flagging every pruned term."""
     from tsidx.fsck import fsck_index
     from tsidx.prune import prune_by_impact
 
-    pruned = prune_by_impact(QueryEngine(built), lam=0.5)
+    pruned = prune_by_impact(QueryEngine(standin_built), lam=0.5)
     assert pruned.meta["pruned_impact_lam"] == 0.5
     checks = {r["check"]: r["n_bad"] for r in fsck_index(pruned).collect()}
     assert all(v == 0 for v in checks.values()), checks

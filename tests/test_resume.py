@@ -97,7 +97,7 @@ def test_resumable_matches_in_memory_build(spark, sonnets_transcripts, tmp_path)
 
 
 def test_read_index_at_snapshot_equals_truncated_build(
-    spark, sonnets_transcripts, tmp_path
+    spark, standin_transcripts, tmp_path
 ):
     """Time travel: the index read at shard K's commit equals a fresh
     build over the first K+1 shards' documents — postings, dictionary,
@@ -106,7 +106,7 @@ def test_read_index_at_snapshot_equals_truncated_build(
 
     path = str(tmp_path / "idx")
     full = build_index_resumable(
-        sonnets_transcripts, path, block_size=16, shard_size=64
+        standin_transcripts, path, block_size=16, shard_size=64
     )
     assert full is not None
     snap = read_index_at(spark, path, through_shard=1)

@@ -260,22 +260,19 @@ def test_dedup_stream_watermarked(spark, halves, tmp_path):
     assert spark.read.parquet(out_dir).count() == len(set(first))
 
 
-def test_read_stream_index_at_snapshot(spark, sonnets_transcripts, tmp_path):
-    """The streaming index read at batch K equals a directory where only
+def test_read_stream_index_at_snapshot(spark, standin_transcripts, tmp_path):
+    """The streaming index read at batch K (``tsidx.resume.read_index_at``
+    serves the streaming layout too) equals a directory where only
     batches 0..K were ever appended — postings, dictionary, BM25 stats —
     and pre-compaction snapshots are rejected after compaction."""
     from pyspark.sql import functions as F
 
-    from tsidx.streaming import (
-        append_batch,
-        compact_stream_index,
-        read_stream_index_at,
-    )
+    from tsidx.resume import read_index_at
 
     full = str(tmp_path / "full")
     trunc = str(tmp_path / "trunc")
     thirds = [
-        sonnets_transcripts.filter(
+        standin_transcripts.filter(
             (F.substring("conv_id", 8, 3).cast("int") % 3) == i
         )
         for i in range(3)
@@ -285,7 +282,7 @@ def test_read_stream_index_at_snapshot(spark, sonnets_transcripts, tmp_path):
         if b < 2:
             append_batch(part, trunc, b, block_size=64)
 
-    snap = read_stream_index_at(spark, full, 1)
+    snap = read_index_at(spark, full, 1)
     from tsidx.streaming import read_stream_index
 
     want = read_stream_index(spark, trunc)
@@ -302,15 +299,15 @@ def test_read_stream_index_at_snapshot(spark, sonnets_transcripts, tmp_path):
     )
     assert p1 == p2
     with pytest.raises(ValueError, match="uncommitted"):
-        read_stream_index_at(spark, full, 5)
+        read_index_at(spark, full, 5)
     compact_stream_index(spark, full)
     with pytest.raises(ValueError, match="predates compaction"):
-        read_stream_index_at(spark, full, 1)
+        read_index_at(spark, full, 1)
     # at/after the compaction point the snapshot is valid: shard 0 now
     # covers batches 0..2, so the on-disk state is complete and equals
     # the full index read
     whole = read_stream_index(spark, full)
-    snap2 = read_stream_index_at(spark, full, 2)
+    snap2 = read_index_at(spark, full, 2)
     assert snap2.meta["n_docs"] == whole.meta["n_docs"]
     s1 = sorted((r["term"], r["df"]) for r in snap2.terms.collect())
     s2 = sorted((r["term"], r["df"]) for r in whole.terms.collect())
@@ -318,9 +315,9 @@ def test_read_stream_index_at_snapshot(spark, sonnets_transcripts, tmp_path):
     # ingest past the compaction point: a snapshot at the compaction
     # point excludes the new batch, a snapshot at it includes it
     append_batch(thirds[0], full, 3, block_size=64)
-    snap_pre = read_stream_index_at(spark, full, 2)
+    snap_pre = read_index_at(spark, full, 2)
     assert snap_pre.meta["n_docs"] == whole.meta["n_docs"]
-    snap_post = read_stream_index_at(spark, full, 3)
+    snap_post = read_index_at(spark, full, 3)
     assert (
         snap_post.meta["n_docs"]
         == whole.meta["n_docs"] + thirds[0].count()  # one doc per turn

@@ -17,10 +17,17 @@ Design notes for 10^12-turn scale:
   joins, not aggregations, so this manual salt is required (SURVEY §2.4 N4).
 - Blocks are docID-contiguous, so the global posting list of a term is the
   concatenation of its blocks in block_id order — merge is free.
-- Block metadata (min/max doc, max tf, min dl, sum tf) is computed JVM-side
-  in the same aggregation; fsck checks it, term pruning and deletes rewrite it.
+- One owner for the posting-block row: :func:`_block_rows` computes the
+  block metadata (df, min/max doc, max tf, min dl, sum tf) with vectorized
+  ``reduceat`` and varbyte-encodes the streams. The fused builder, the
+  delete rewriter (tsidx.deletes) and the impact-prune encoder
+  (tsidx.prune) all emit rows through it; the explode twin aggregates the
+  same metadata JVM-side as an independent cross-check. fsck checks it.
   It holds no global stats (avgdl), which is what makes per-shard
   checkpointed builds single-pass and shards mergeable (tsidx.resume).
+- The terms table and the corpus statistics (n_docs, total_tokens, avgdl)
+  come from :func:`tsidx.index.assemble_index`, the one constructor every
+  index-producing path shares.
 - idf is *not* materialized: it needs only (N, df) and is computed on the
   driver at query time with CPython ``math.log`` so that engine scores are
   bit-identical to the single-node oracle (JVM ``Math.log`` may differ in the
@@ -38,7 +45,7 @@ from pyspark.sql import functions as F
 
 from tsidx.compress import encode_posting_block
 from tsidx.docids import assign_doc_ids, check_unique_keys
-from tsidx.index import POSTINGS_CODEC, POSTINGS_VARBYTE_SCHEMA, InvertedIndex
+from tsidx.index import POSTINGS_VARBYTE_SCHEMA, InvertedIndex, assemble_index
 from tsidx.oracle import B, K1
 from tsidx.ship import ensure_shipped
 from tsidx.tokenize import TOKENS_SCHEMA, tokenize_map_in_pandas
@@ -86,6 +93,68 @@ def _encode_blocks(batches):
         )
 
 
+def _block_rows(terms, block_id, docs, tfs, dls, starts):
+    """THE posting-block row encoder: per-term segments of one block ->
+    that block's posting rows (``POSTINGS_VARBYTE_SCHEMA``).
+
+    ``docs``/``tfs``/``dls`` are parallel arrays sorted by (term, doc_id);
+    ``starts`` holds each term's first offset, so segment *i* is
+    ``[starts[i], starts[i + 1])`` and the last runs to the end — every
+    segment non-empty. ``terms[i]`` names segment *i*. The block metadata
+    (df, min/max doc, max tf, min dl, sum tf) is one vectorized
+    ``reduceat`` per column; only the varbyte encode loops per segment.
+    The fused builder, the delete rewriter and the impact-prune encoder all
+    emit rows through here, so a block is byte-identical whichever path
+    wrote it (the explode twin keeps its JVM-aggregated metadata as the
+    independent cross-check).
+    """
+    import numpy as np
+    import pandas as pd
+
+    if len(starts) == 0:
+        return pd.DataFrame(
+            {
+                "term": pd.Series(dtype=object),
+                "block_id": pd.Series(dtype="int64"),
+                "block_df": pd.Series(dtype="int64"),
+                "min_doc": pd.Series(dtype="int64"),
+                "max_doc": pd.Series(dtype="int64"),
+                "max_tf": pd.Series(dtype="int32"),
+                "min_dl": pd.Series(dtype="int32"),
+                "sum_tf": pd.Series(dtype="int64"),
+                "doc_gaps": pd.Series(dtype=object),
+                "tfs": pd.Series(dtype=object),
+                "dls": pd.Series(dtype=object),
+            }
+        )
+    docs = np.asarray(docs, dtype=np.uint64)
+    tfs = np.asarray(tfs, dtype=np.uint64)
+    dls = np.asarray(dls, dtype=np.uint64)
+    starts = np.asarray(starts, dtype=np.int64)
+    ends = np.append(starts[1:], len(docs))
+    gaps_col, tfs_col, dls_col = [], [], []
+    for s, e in zip(starts, ends):
+        g, tb, lb = encode_posting_block(docs[s:e], tfs[s:e], dls[s:e])
+        gaps_col.append(g)
+        tfs_col.append(tb)
+        dls_col.append(lb)
+    return pd.DataFrame(
+        {
+            "term": terms,
+            "block_id": np.full(len(starts), block_id, dtype=np.int64),
+            "block_df": (ends - starts).astype(np.int64),
+            "min_doc": docs[starts].astype(np.int64),
+            "max_doc": docs[ends - 1].astype(np.int64),
+            "max_tf": np.maximum.reduceat(tfs, starts).astype(np.int32),
+            "min_dl": np.minimum.reduceat(dls, starts).astype(np.int32),
+            "sum_tf": np.add.reduceat(tfs, starts).astype(np.int64),
+            "doc_gaps": gaps_col,
+            "tfs": tfs_col,
+            "dls": dls_col,
+        }
+    )
+
+
 def _make_fused_block_builder():
     """applyInPandas factory: one group = one block's docs (doc_id, text)
     -> that block's complete posting rows.
@@ -102,7 +171,6 @@ def _make_fused_block_builder():
 
     def build_block(pdf):
         import numpy as np
-        import pandas as pd
 
         cache = build_block._stem_cache  # per-worker, survives across groups
         pdf = pdf.sort_values("doc_id", kind="mergesort")
@@ -120,23 +188,8 @@ def _make_fused_block_builder():
             [0 if t is None else len(t) for t in token_lists], dtype=np.int64
         )
         n_tok = int(lens.sum())
-        empty = pd.DataFrame(
-            {
-                "term": pd.Series(dtype=object),
-                "block_id": pd.Series(dtype="int64"),
-                "block_df": pd.Series(dtype="int64"),
-                "min_doc": pd.Series(dtype="int64"),
-                "max_doc": pd.Series(dtype="int64"),
-                "max_tf": pd.Series(dtype="int32"),
-                "min_dl": pd.Series(dtype="int32"),
-                "sum_tf": pd.Series(dtype="int64"),
-                "doc_gaps": pd.Series(dtype=object),
-                "tfs": pd.Series(dtype=object),
-                "dls": pd.Series(dtype=object),
-            }
-        )
         if n_tok == 0:
-            return empty
+            return _block_rows((), block_id, (), (), (), ())
         flat = np.empty(n_tok, dtype=object)
         pos = 0
         for t in token_lists:
@@ -165,32 +218,9 @@ def _make_fused_block_builder():
         # per-term segments with ascending doc order inside each
         order = np.lexsort((d_i, t_i))
         d_i, t_i, tf = d_i[order], t_i[order], tf[order]
-        post_docs = doc_ids[d_i].astype(np.uint64)
-        post_dls = lens[d_i].astype(np.uint64)
         used_terms, starts = np.unique(t_i, return_index=True)
-        ends = np.append(starts[1:], len(t_i))
-
-        tf64 = tf.astype(np.uint64)
-        out = {
-            "term": terms[used_terms],
-            "block_id": np.full(len(starts), block_id, dtype=np.int64),
-            "block_df": (ends - starts).astype(np.int64),
-            "min_doc": post_docs[starts].astype(np.int64),
-            "max_doc": post_docs[ends - 1].astype(np.int64),
-            "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
-            "min_dl": np.minimum.reduceat(post_dls, starts).astype(np.int32),
-            "sum_tf": np.add.reduceat(tf, starts).astype(np.int64),
-        }
-        gaps_col, tfs_col, dls_col = [], [], []
-        for s, e in zip(starts, ends):
-            g, tb, lb = encode_posting_block(
-                post_docs[s:e], tf64[s:e], post_dls[s:e]
-            )
-            gaps_col.append(g)
-            tfs_col.append(tb)
-            dls_col.append(lb)
-        return pd.DataFrame(
-            {**out, "doc_gaps": gaps_col, "tfs": tfs_col, "dls": dls_col}
+        return _block_rows(
+            terms[used_terms], block_id, doc_ids[d_i], tf, lens[d_i], starts
         )
 
     build_block._stem_cache = {}
@@ -282,25 +312,11 @@ def build_index(
       (doc, term) rows -> groupBy(term, block)); kept as the
       cross-validation twin and for engines that need the token stream.
     """
-    import os
-    import sys
-    import time
-
-    trace = os.environ.get("TSIDX_PHASE_TIMING") == "1"
-
-    def _mark(label, t0):
-        if trace:
-            print(f"[tsidx-phase] {label}: {time.time() - t0:.1f}s",
-                  file=sys.stderr, flush=True)
-        return time.time()
-
     if strategy not in ("fused", "explode"):
         raise ValueError(f"unknown strategy: {strategy}")
     ensure_shipped(transcripts.sparkSession)
-    t = time.time()
     if check_unique:
         check_unique_keys(transcripts, order_cols)
-    t = _mark("unique_check", t)
 
     # the assign step persists its range partitioning internally (see
     # tsidx/docids.py — load-bearing) and hands back the row count from its
@@ -313,7 +329,6 @@ def build_index(
         transcripts, order_cols, method=docid_method,
         num_partitions=num_partitions, return_count=True,
     )
-    t = _mark("assign_doc_ids", t)
 
     if strategy == "fused":
         postings = build_postings(docs, block_size)
@@ -327,22 +342,16 @@ def build_index(
     agg = postings.agg(
         F.sum("sum_tf").alias("total_tokens")
     ).collect()[0]
-    t = _mark("postings_build", t)
-    total_tokens = int(agg["total_tokens"] or 0)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
+    # no wall-clock fields: index content and metadata are pure functions
+    # of the input table (SURVEY §7.2 determinism bans)
     meta = {
-        "n_docs": int(n_docs),
-        "total_tokens": int(total_tokens),
-        "avgdl": avgdl,
         "k1": k1,
         "b": b,
         "block_size": int(block_size),
-        "codec": POSTINGS_CODEC,
         "order_cols": list(order_cols),
-        # no wall-clock fields: index content and metadata are pure functions
-        # of the input table (SURVEY §7.2 determinism bans)
         "version": 1,
     }
-    return InvertedIndex(docs=docs, postings=postings, terms=terms, meta=meta)
+    return assemble_index(
+        docs, postings, meta,
+        n_docs=n_docs, total_tokens=agg["total_tokens"] or 0,
+    )

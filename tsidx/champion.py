@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsidx.query import bm25_wtf
+
 __all__ = ["champion_lists", "champion_topk", "champion_topk_rescored"]
 
 
@@ -40,17 +42,9 @@ def champion_lists(engine, m: int) -> DataFrame:
     must not depend on which engine (or summation order) computed wtf,
     and a 1-ulp difference at an unrounded boundary would swap a
     champion. See module docstring."""
-    k1 = float(engine.index.meta["k1"])
-    b = float(engine.index.meta["b"])
-    avgdl = float(engine.index.meta["avgdl"])
     rows = engine.posting_rows_all()
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    wtf = (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl))
-    )
     w = Window.partitionBy("term").orderBy(
-        F.desc(F.round(wtf, 6)), F.asc("doc_id")
+        F.desc(F.round(bm25_wtf(engine.index.meta), 6)), F.asc("doc_id")
     )
     return (
         rows.withColumn("rn", F.row_number().over(w))

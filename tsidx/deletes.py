@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsidx.index import POSTINGS_VARBYTE_SCHEMA, InvertedIndex
+from tsidx.index import POSTINGS_VARBYTE_SCHEMA, InvertedIndex, assemble_index
 
 __all__ = ["delete_docs", "apply_deletes"]
 
@@ -67,48 +67,37 @@ def delete_docs(index: InvertedIndex, doc_ids) -> InvertedIndex:
 
 def _make_block_rewriter():
     """applyInPandas factory: (posting-block rows + their block's deleted
-    ids) -> re-encoded rows without the deleted docs."""
+    ids) -> re-encoded rows without the deleted docs, through the build's
+    row encoder (a term whose postings in the block all died drops out)."""
+    from tsidx.build import _block_rows
 
     def rewrite(pdf):
         import numpy as np
-        import pandas as pd
 
-        from tsidx.compress import decode_posting_block, encode_posting_block
+        from tsidx.compress import decode_posting_block
 
-        out_rows = []
-        dead_all = pdf["_dead"].iloc[0]
-        dead = np.asarray(sorted(dead_all), dtype=np.int64)
+        dead = np.asarray(sorted(pdf["_dead"].iloc[0]), dtype=np.int64)
+        terms, docs, tfs, dls, starts = [], [], [], [], []
+        n = 0
         for r in pdf.itertuples(index=False):
-            doc_ids, tfs, dls = decode_posting_block(
+            doc_ids, tf, dl = decode_posting_block(
                 bytes(r.doc_gaps), bytes(r.tfs), bytes(r.dls)
             )
             keep = ~np.isin(doc_ids.astype(np.int64), dead)
             if not keep.any():
-                continue  # the whole block's postings for this term died
-            d, t, l = doc_ids[keep], tfs[keep], dls[keep]
-            g, tb, lb = encode_posting_block(d, t, l)
-            out_rows.append(
-                {
-                    "term": r.term,
-                    "block_id": r.block_id,
-                    "block_df": int(len(d)),
-                    "min_doc": int(d[0]),
-                    "max_doc": int(d[-1]),
-                    "max_tf": int(t.max()),
-                    "min_dl": int(l.min()),
-                    "sum_tf": int(t.sum()),
-                    "doc_gaps": g,
-                    "tfs": tb,
-                    "dls": lb,
-                }
-            )
-        cols = [
-            "term", "block_id", "block_df", "min_doc", "max_doc",
-            "max_tf", "min_dl", "sum_tf", "doc_gaps", "tfs", "dls",
-        ]
-        if not out_rows:
-            return pd.DataFrame({c: [] for c in cols})
-        return pd.DataFrame(out_rows)[cols]
+                continue
+            terms.append(r.term)
+            docs.append(doc_ids[keep])
+            tfs.append(tf[keep])
+            dls.append(dl[keep])
+            starts.append(n)
+            n += int(keep.sum())
+        if not terms:
+            return _block_rows((), 0, (), (), (), ())
+        return _block_rows(
+            terms, int(pdf["block_id"].iloc[0]), np.concatenate(docs),
+            np.concatenate(tfs), np.concatenate(dls), starts,
+        )
 
     return rewrite
 
@@ -146,27 +135,14 @@ def apply_deletes(index: InvertedIndex) -> InvertedIndex:
     )
     postings = untouched.unionByName(rewritten)
     docs = index.docs.join(index.tombstones.select("doc_id"), "doc_id", "anti")
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
     stats = postings.agg(
         F.sum("sum_tf").alias("total_tokens")
     ).collect()[0]
     n_deleted = index.tombstones.count()
-    n_docs = int(index.meta["n_docs"]) - int(n_deleted)
-    total_tokens = int(stats["total_tokens"] or 0)
-    meta = dict(index.meta)
-    meta.update(
-        {
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-        }
-    )
-    return InvertedIndex(
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        meta=meta,
+    return assemble_index(
+        docs, postings, index.meta,
+        n_docs=int(index.meta["n_docs"]) - int(n_deleted),
+        total_tokens=stats["total_tokens"] or 0,
         manifest=index.manifest,
-        pinned={p for p in index.pinned},
-        tombstones=None,
+        pinned=index.pinned,
     )

@@ -13,6 +13,13 @@ An index is four tables plus scalar metadata:
 - ``terms``     — (term, df) global document frequencies;
 - ``manifest``  — per-build-partition lineage + metrics rows (SURVEY §2.4 N5).
 
+``terms`` and the corpus statistics in ``meta`` (n_docs, total_tokens,
+avgdl) are derived, never stored independently: :func:`assemble_index` is
+the one place that aggregates ``terms`` from the posting blocks'
+``block_df`` column, computes ``avgdl`` and stamps the ``codec``. Every
+path that produces an index — build, update, apply-deletes, merge,
+snapshot reads, streaming appends, resumable finalize — goes through it.
+
 Physical layout on disk (parquet in the sandbox; the same writer would target
 Iceberg tables on a real cluster — no Iceberg runtime jar is present here):
 
@@ -34,10 +41,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsidx.io import read_table, write_table
+from tsidx.io import commit_json, read_table, write_table
 
 __all__ = [
     "InvertedIndex",
+    "assemble_index",
     "merge_indexes",
     "diff_indexes",
     "check_codec",
@@ -108,10 +116,10 @@ class InvertedIndex:
             write_table(
                 self.tombstones.coalesce(1), os.path.join(path, "tombstones")
             )
-        meta = dict(self.meta)
-        meta["pinned"] = sorted(self.pinned)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f, indent=2, sort_keys=True)
+        commit_json(
+            os.path.join(path, "meta.json"),
+            {**self.meta, "pinned": sorted(self.pinned)},
+        )
 
     @classmethod
     def read(cls, spark: SparkSession, path: str) -> "InvertedIndex":
@@ -182,6 +190,48 @@ class InvertedIndex:
         return self.terms.select("term", "df").orderBy(F.desc("df"), F.asc("term"))
 
 
+def assemble_index(
+    docs: DataFrame | None,
+    postings: DataFrame,
+    meta: dict,
+    *,
+    n_docs: int,
+    total_tokens: int,
+    manifest: DataFrame | None = None,
+    pinned=(),
+    tombstones: DataFrame | None = None,
+) -> InvertedIndex:
+    """The one constructor of an index's derived statistics: the (term, df)
+    dictionary re-aggregated from the posting blocks' ``block_df`` metadata
+    (no posting byte decoded), ``avgdl = total_tokens / n_docs``, and the
+    ``codec`` stamp, over the caller's *meta* (build parameters and
+    lineage markers, copied).
+
+    Callers supply *n_docs* and *total_tokens* from wherever they already
+    hold them — a postings ``sum_tf`` agg (build, update, apply-deletes),
+    committed manifest rows (snapshot reads, resumable finalize), the two
+    sides' meta (merge) or the stream state file (streaming append).
+    *docs* may be ``None`` only for a caller that persists ``terms`` and
+    ``meta`` and discards the index (streaming append).
+    """
+    n_docs, total_tokens = int(n_docs), int(total_tokens)
+    return InvertedIndex(
+        docs=docs,
+        postings=postings,
+        terms=postings.groupBy("term").agg(F.sum("block_df").alias("df")),
+        meta={
+            **meta,
+            "n_docs": n_docs,
+            "total_tokens": total_tokens,
+            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
+            "codec": POSTINGS_CODEC,
+        },
+        manifest=manifest,
+        pinned=set(pinned),
+        tombstones=tombstones,
+    )
+
+
 def diff_indexes(a: "InvertedIndex", b: "InvertedIndex") -> DataFrame:
     """Vocabulary-level diff between two index builds: one row per term
     whose document frequency changed — ``(term, df_a, df_b, status)``
@@ -241,18 +291,6 @@ def merge_indexes(a: "InvertedIndex", b: "InvertedIndex") -> "InvertedIndex":
     )
     if overlap:
         raise ValueError("indexes share a posting block — docID ranges overlap")
-    postings = a.postings.unionByName(b.postings)
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
-    n_docs = a.meta["n_docs"] + b.meta["n_docs"]
-    total_tokens = a.meta["total_tokens"] + b.meta["total_tokens"]
-    meta = dict(a.meta)
-    meta.update(
-        {
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-        }
-    )
     manifest = None
     if a.manifest is not None and b.manifest is not None:
         manifest = a.manifest.unionByName(b.manifest, allowMissingColumns=True)
@@ -262,11 +300,12 @@ def merge_indexes(a: "InvertedIndex", b: "InvertedIndex") -> "InvertedIndex":
         tombstones = a.tombstones.unionByName(b.tombstones).distinct()
     else:
         tombstones = a.tombstones if a.tombstones is not None else b.tombstones
-    return InvertedIndex(
-        docs=a.docs.unionByName(b.docs),
-        postings=postings,
-        terms=terms,
-        meta=meta,
+    return assemble_index(
+        a.docs.unionByName(b.docs),
+        a.postings.unionByName(b.postings),
+        a.meta,
+        n_docs=a.meta["n_docs"] + b.meta["n_docs"],
+        total_tokens=a.meta["total_tokens"] + b.meta["total_tokens"],
         manifest=manifest,
         pinned=a.pinned | b.pinned,
         tombstones=tombstones,

@@ -17,13 +17,19 @@ sorted by (term, block_id) so `term IN (...)` predicates prune row groups /
 data files via min-max statistics in either format; shard-partitioned
 layouts keep their ``shard=K`` directory column (Iceberg: identity
 partition on ``shard``).
+
+The JSON side files (``meta.json``, ``config.json``, ``stream_state.json``,
+manifest markers) go through :func:`commit_json`.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["table_format", "read_table", "write_table", "DEFAULT_FORMAT"]
+__all__ = ["table_format", "read_table", "write_table", "commit_json", "DEFAULT_FORMAT"]
 
 DEFAULT_FORMAT = "parquet"
 
@@ -62,3 +68,13 @@ def write_table(
     """Write one index table (``format(...).mode(...).save(path)``)."""
     fmt = fmt or table_format(df.sparkSession)
     df.write.format(fmt).mode(mode).save(path)
+
+
+def commit_json(path: str, record: dict) -> None:
+    """Write *record* as JSON at *path* atomically: dump to ``path.tmp``,
+    then ``os.replace`` — a reader sees the old file or the new one, never
+    a torn write. A manifest marker's replace is its shard's commit point."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(record, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)

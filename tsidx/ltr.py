@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsidx.query import bm25_wtf
+
 __all__ = ["ltr_features"]
 
 
@@ -53,9 +55,6 @@ def ltr_features(
     )
     if not idfs:
         return spark.createDataFrame([], schema)
-    k1 = float(engine.index.meta["k1"])
-    b = float(engine.index.meta["b"])
-    avgdl = float(engine.index.meta["avgdl"])
     c_tokens = float(engine.index.meta["total_tokens"])
     mu = float(mu)
     # cf (collection frequency) per term from posting-block metadata —
@@ -79,9 +78,6 @@ def ltr_features(
     rows = engine._live(engine.posting_rows(sorted(idfs)))
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
-    wtf = (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl))
-    )
     lmd_c = F.log(
         F.lit(1.0) + tf / (F.lit(mu) * (F.col("cf") / F.lit(c_tokens)))
     ) + F.log(F.lit(mu) / (F.lit(mu) + dl))
@@ -95,7 +91,7 @@ def ltr_features(
 
     joined = (
         rows.join(F.broadcast(fan), "term")
-        .withColumn("contrib", F.col("idf") * wtf)
+        .withColumn("contrib", F.col("idf") * bm25_wtf(engine.index.meta))
         .withColumn("tfidf", tf * F.col("idf"))
         .withColumn("lmd_c", lmd_c)
     )

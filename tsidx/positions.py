@@ -298,6 +298,7 @@ def phrase_bm25_topk(
     TakeOrdered on (-score, doc_id).
     """
     from tsidx.oracle import bm25_idf
+    from tsidx.query import bm25_wtf
 
     spark = positional.sparkSession
     # tombstone filter BEFORE the df count: deleted docs must contribute
@@ -311,17 +312,8 @@ def phrase_bm25_topk(
         return spark.createDataFrame([], schema)
     first_term = _phrase_offsets(phrase)[0][0]
     dl_rows = engine.posting_rows([first_term]).select("doc_id", "dl")
-    n = int(engine.index.meta["n_docs"])
-    k1 = float(engine.index.meta["k1"])
-    b = float(engine.index.meta["b"])
-    avgdl = float(engine.index.meta["avgdl"])
-    idf = bm25_idf(n, df_p)
-    tf = F.col("n_occ").cast("double")
-    dl = F.col("dl").cast("double")
-    score = F.lit(idf) * (
-        (tf * F.lit(k1 + 1.0))
-        / (tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl)))
-    )
+    idf = bm25_idf(int(engine.index.meta["n_docs"]), df_p)
+    score = F.lit(idf) * bm25_wtf(engine.index.meta, tf="n_occ")
     return (
         counts.join(dl_rows, "doc_id")
         .select(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
+from tsidx.query import bm25_wtf
 
 __all__ = ["prune_terms", "vocab_coverage", "impact_kept_rows", "prune_by_impact"]
 
@@ -119,45 +120,21 @@ def vocab_coverage(index: InvertedIndex, top_v: int) -> DataFrame:
 
 def _make_impact_encoder():
     """applyInPandas factory: kept decoded rows of one doc-range block ->
-    re-encoded (term, block_id, ...) posting rows."""
+    re-encoded (term, block_id, ...) posting rows, through the build's row
+    encoder."""
+    from tsidx.build import _block_rows
 
     def enc(pdf):
         import numpy as np
-        import pandas as pd
 
-        from tsidx.compress import encode_posting_block
-
-        out = []
-        if len(pdf):
-            bid = int(pdf["block_id"].iloc[0])
-            for term, g in pdf.groupby("term", sort=True):
-                order = np.argsort(g["doc_id"].to_numpy(), kind="stable")
-                d = g["doc_id"].to_numpy()[order]
-                t = g["tf"].to_numpy()[order]
-                l = g["dl"].to_numpy()[order]
-                gaps, tb, lb = encode_posting_block(d, t, l)
-                out.append(
-                    {
-                        "term": term,
-                        "block_id": bid,
-                        "block_df": int(len(d)),
-                        "min_doc": int(d[0]),
-                        "max_doc": int(d[-1]),
-                        "max_tf": int(t.max()),
-                        "min_dl": int(l.min()),
-                        "sum_tf": int(t.sum()),
-                        "doc_gaps": gaps,
-                        "tfs": tb,
-                        "dls": lb,
-                    }
-                )
-        cols = [
-            "term", "block_id", "block_df", "min_doc", "max_doc",
-            "max_tf", "min_dl", "sum_tf", "doc_gaps", "tfs", "dls",
-        ]
-        if not out:
-            return pd.DataFrame({c: [] for c in cols})
-        return pd.DataFrame(out)[cols]
+        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
+        terms = pdf["term"].to_numpy()
+        starts = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+        starts = np.concatenate(([0], starts))
+        return _block_rows(
+            terms[starts], int(pdf["block_id"].iloc[0]), pdf["doc_id"].to_numpy(),
+            pdf["tf"].to_numpy(), pdf["dl"].to_numpy(), starts,
+        )
 
     return enc
 
@@ -189,9 +166,6 @@ def impact_kept_rows(engine, lam: float) -> DataFrame:
     if not 0.0 < lam <= 1.0:
         raise ValueError(f"lam must be in (0, 1], got {lam}")
     index = engine.index
-    k1 = float(index.meta["k1"])
-    b = float(index.meta["b"])
-    avgdl = float(index.meta["avgdl"])
     n = int(index.meta["n_docs"])
     idf = F.log(
         (F.lit(float(n)) - F.col("df") + F.lit(0.5))
@@ -199,13 +173,7 @@ def impact_kept_rows(engine, lam: float) -> DataFrame:
         + F.lit(1.0)
     )
     dictionary = index.terms.select("term", idf.alias("_idf"))
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    # the canonical contribution expression shape (QueryEngine._contrib_expr)
-    contrib = F.col("_idf") * (
-        (tf * F.lit(k1 + 1.0))
-        / (tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl)))
-    )
+    contrib = F.col("_idf") * bm25_wtf(index.meta)
     scored = (
         engine._live(engine.posting_rows_all())
         .join(dictionary, "term")

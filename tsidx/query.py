@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
-from tsidx.oracle import bm25_idf
 from tsidx.tokenize import query_terms
+from tsidx.wand import term_idfs
 
 __all__ = ["QueryEngine"]
 
@@ -112,6 +112,24 @@ def _decode_docids_only(batches):
         )
 
 
+def bm25_wtf(meta: dict, tf: str = "tf", dl: str = "dl"):
+    """THE JVM BM25 term-weight column ``tf·(k1+1) / (tf + k1·(1 − b +
+    b·dl/avgdl))`` over the *tf* / *dl* columns, with the index *meta*'s
+    k1, b and avgdl as literals. Every JVM scorer multiplies it by an idf
+    (``idf * wtf``, one multiply): the bit-identity of ``bm25_scores``,
+    the batch scorer, explain, LTR, phrase BM25, champion lists and
+    impact pruning with the single-node oracle holds only while they all
+    evaluate this one IEEE754 expression tree."""
+    k1 = float(meta["k1"])
+    b = float(meta["b"])
+    avgdl = float(meta["avgdl"])
+    tf_c = F.col(tf).cast("double")
+    dl_c = F.col(dl).cast("double")
+    return (tf_c * F.lit(k1 + 1.0)) / (
+        tf_c + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl_c) / F.lit(avgdl))
+    )
+
+
 class QueryEngine:
     def __init__(self, index: InvertedIndex):
         from tsidx.ship import ensure_shipped
@@ -158,33 +176,20 @@ class QueryEngine:
         return df.join(tomb.select("doc_id"), "doc_id", "anti")
 
     def _contrib_expr(self, idfs: dict[str, float]):
-        """``(idf_map_col, contrib_col)`` — THE canonical per-(doc, term)
-        BM25 contribution expression. Single definition on purpose: the
-        documented bit-identity between ``bm25_scores``, ``explain_scores``
-        (sum of contribs == score), the ranker, and the single-node oracle
-        holds only while every path evaluates this exact IEEE754
-        expression shape."""
-        k1 = float(self.index.meta["k1"])
-        b = float(self.index.meta["b"])
-        avgdl = float(self.index.meta["avgdl"])
+        """``(idf_map_col, contrib_col)`` — the per-(doc, term) BM25
+        contribution ``idf × wtf`` with the canonical :func:`bm25_wtf`:
+        ``bm25_scores``, ``explain_scores`` (sum of contribs == score) and
+        the single-node oracle agree bit for bit because every path
+        evaluates this exact IEEE754 expression shape."""
         idf_map = F.create_map(
             *[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])]
         )
-        tf = F.col("tf").cast("double")
-        dl = F.col("dl").cast("double")
-        contrib = idf_map[F.col("term")] * (
-            (tf * F.lit(k1 + 1.0))
-            / (tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl)))
-        )
-        return idf_map, contrib
+        return idf_map, idf_map[F.col("term")] * bm25_wtf(self.index.meta)
 
     def query_idfs(self, terms: list[str]) -> dict[str, float]:
-        """Driver-side idf for the query's terms (bit-identical to oracle)."""
-        if not terms:
-            return {}
-        n = self.index.meta["n_docs"]
-        rows = self.index.terms.filter(F.col("term").isin(terms)).collect()
-        return {r["term"]: bm25_idf(n, r["df"]) for r in rows}
+        """Driver-side idf for the query's terms (bit-identical to oracle);
+        the ranker's :func:`tsidx.wand.term_idfs`."""
+        return term_idfs(self.index, terms)
 
     # ------------------------------------------------------------- operators
 
@@ -739,9 +744,6 @@ class QueryEngine:
             return spark.createDataFrame(
                 [], "query_id string, doc_id long, score double"
             )
-        k1 = float(self.index.meta["k1"])
-        b = float(self.index.meta["b"])
-        avgdl = float(self.index.meta["avgdl"])
         fan = spark.createDataFrame(
             [
                 (qid, t, idfs[t])
@@ -752,14 +754,9 @@ class QueryEngine:
             "query_id string, term string, idf double",
         )
         rows = self._live(self.posting_rows(sorted(idfs)))
-        tf = F.col("tf").cast("double")
-        dl = F.col("dl").cast("double")
-        wtf = (tf * F.lit(k1 + 1.0)) / (
-            tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * dl) / F.lit(avgdl))
-        )
         return (
             rows.join(F.broadcast(fan), "term")
-            .withColumn("contrib", F.col("idf") * wtf)
+            .withColumn("contrib", F.col("idf") * bm25_wtf(self.index.meta))
             .groupBy("query_id", "doc_id")
             .agg(
                 F.aggregate(

@@ -28,7 +28,11 @@ df + the hottest term). All content is a pure function of the input table —
 no wall-clock or random fields (SURVEY §7.2 determinism bans).
 
 Resume = set difference between planned shards and committed manifest
-markers; a killed build redoes at most one shard. Writing data before the
+markers; a killed build redoes at most one shard. Finalize and snapshot
+reads derive the terms table and BM25 stats through
+:func:`tsidx.index.assemble_index`; :func:`read_index_at` is the one
+snapshot reader for both shard-partitioned layouts (resumable and
+streaming, ``tsidx.streaming``). Writing data before the
 marker makes the commit atomic-enough for object stores (orphan data from a
 crashed shard is overwritten on retry with mode=overwrite).
 """
@@ -43,8 +47,8 @@ from pyspark.sql import functions as F
 
 from tsidx.build import DEFAULT_BLOCK_SIZE, build_postings
 from tsidx.docids import assign_doc_ids, check_unique_keys
-from tsidx.index import POSTINGS_CODEC, InvertedIndex, check_codec
-from tsidx.io import read_table, write_table
+from tsidx.index import POSTINGS_CODEC, InvertedIndex, assemble_index, check_codec
+from tsidx.io import commit_json, read_table, write_table
 from tsidx.oracle import B, K1
 from tsidx.ship import ensure_shipped
 
@@ -132,8 +136,7 @@ def _prepare(
         "b": B,
         "version": 1,
     }
-    with open(cfg_path, "w") as f:
-        json.dump(cfg, f, indent=2, sort_keys=True)
+    commit_json(cfg_path, cfg)
     return cfg
 
 
@@ -177,42 +180,33 @@ def _build_shard(spark: SparkSession, path: str, cfg: dict, shard: int) -> None:
         "posting_bytes": _dir_bytes(out_dir),
     }
     os.makedirs(_manifest_dir(path), exist_ok=True)
-    marker = _shard_marker(path, shard)
-    with open(marker + ".tmp", "w") as f:
-        json.dump(row, f, indent=2, sort_keys=True)
-    os.replace(marker + ".tmp", marker)  # commit point
+    commit_json(_shard_marker(path, shard), row)  # commit point
+
+
+def read_shards(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """A shard-partitioned table (``<table>/shard=K/``; resumable postings,
+    streaming docs and postings) with its ``shard`` partition column kept
+    for pruning."""
+    d = os.path.join(path, table)
+    return read_table(spark, d, base_path=d)
 
 
 def _finalize(spark: SparkSession, path: str, cfg: dict) -> InvertedIndex:
-    postings = read_table(
-        spark, os.path.join(path, "postings"),
-        base_path=os.path.join(path, "postings"),
-    ).drop("shard")
+    postings = read_shards(spark, path, "postings").drop("shard")
+    docs = read_table(spark, os.path.join(path, "docs"))
     terms_dir = os.path.join(path, "terms")
     meta_path = os.path.join(path, "meta.json")
     if not os.path.exists(meta_path):
-        terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
+        fresh = assemble_index(
+            docs, postings, _config_meta(cfg),
+            n_docs=cfg["n_docs"],
+            total_tokens=sum(r["token_count"] for r in read_manifest(path)),
+        )
         write_table(
-            terms.repartitionByRange(4, "term").sortWithinPartitions("term"),
+            fresh.terms.repartitionByRange(4, "term").sortWithinPartitions("term"),
             terms_dir,
         )
-        manifest = read_manifest(path)
-        total_tokens = sum(r["token_count"] for r in manifest)
-        meta = {
-            "n_docs": cfg["n_docs"],
-            "total_tokens": total_tokens,
-            "avgdl": (total_tokens / cfg["n_docs"]) if cfg["n_docs"] else 0.0,
-            "k1": cfg["k1"],
-            "b": cfg["b"],
-            "block_size": cfg["block_size"],
-            "codec": POSTINGS_CODEC,
-            "order_cols": cfg["order_cols"],
-            "pinned": [],
-            "version": cfg["version"],
-        }
-        with open(meta_path + ".tmp", "w") as f:
-            json.dump(meta, f, indent=2, sort_keys=True)
-        os.replace(meta_path + ".tmp", meta_path)
+        commit_json(meta_path, {**fresh.meta, "pinned": []})
     with open(meta_path) as f:
         meta = json.load(f)
     pinned = set(meta.pop("pinned", []))
@@ -221,13 +215,19 @@ def _finalize(spark: SparkSession, path: str, cfg: dict) -> InvertedIndex:
         spark.createDataFrame(manifest_rows) if manifest_rows else None
     )
     return InvertedIndex(
-        docs=read_table(spark, os.path.join(path, "docs")),
+        docs=docs,
         postings=postings,
         terms=read_table(spark, terms_dir),
         meta=meta,
         manifest=manifest_df,
         pinned=pinned,
     )
+
+
+def _config_meta(cfg: dict) -> dict:
+    """The build parameters a resumable layout's config.json carries into
+    its index meta (the statistics come from :func:`assemble_index`)."""
+    return {k: cfg[k] for k in ("k1", "b", "block_size", "order_cols", "version")}
 
 
 def build_index_resumable(
@@ -276,70 +276,92 @@ def read_index_at(
     snapshot log (the parquet analog of Iceberg snapshot reads; on a real
     cluster the same call maps to a snapshot-id table read).
 
+    Serves both shard-partitioned layouts, dispatching on
+    ``stream_state.json`` as :meth:`InvertedIndex.read` does: a resumable
+    build (``build_index_resumable``; shard K = docID range K) and a
+    streaming-built index (``tsidx.streaming``; shard K = micro-batch K).
+
     Reconstruction: postings are partition-pruned to ``shard <=
     through_shard`` (the ``shard=K`` directory layout makes this a
-    scan-level prune, not a post-scan filter), docs are cut at the
-    manifest's committed ``doc_hi``, the (term, df) dictionary is
-    re-aggregated over the surviving postings (a vocabulary-sized agg —
-    the price of not having per-snapshot dictionaries), and the BM25
-    stats (n_docs, total_tokens, avgdl) are summed from the committed
-    lineage rows. Scores over the snapshot are therefore identical to a
-    fresh build over the truncated corpus — asserted in
-    tests/test_resume.py.
+    scan-level prune, not a post-scan filter); docs are cut at the
+    manifest's committed ``doc_hi`` (resumable) or partition-pruned the
+    same way (streaming); :func:`tsidx.index.assemble_index` re-aggregates
+    the (term, df) dictionary over the surviving postings (a
+    vocabulary-sized agg — the price of not having per-snapshot
+    dictionaries) with the BM25 stats (n_docs, total_tokens, avgdl) summed
+    from the committed lineage rows. Scores over the snapshot are
+    therefore identical to a fresh build over the truncated corpus —
+    asserted in tests/test_resume.py and tests/test_streaming.py.
 
     Raises ``ValueError`` if any shard ``<= through_shard`` has no commit
     marker (snapshots exist only at committed prefixes: shards commit in
-    doc_id order, so a prefix of markers is the only consistent cut).
+    doc_id / batch order, so a prefix of markers is the only consistent
+    cut), if *through_shard* is outside a resumable build's planned
+    shards, or if a streaming snapshot predates a compaction point
+    (compaction rewrites the prefix into one shard — earlier states no
+    longer exist on disk).
     """
-    cfg_path = _config_path(path)
-    if not os.path.exists(cfg_path):
-        raise ValueError(
-            f"{path} is not a resumable-layout index (no config.json): "
-            "snapshots exist only for build_index_resumable outputs"
-        )
-    cfg = _load_config(path)
-    if not 0 <= through_shard < cfg["n_shards"]:
-        raise ValueError(
-            f"through_shard {through_shard} outside [0, {cfg['n_shards']})"
-        )
-    manifest = [
-        r for r in read_manifest(path) if r["shard_id"] <= through_shard
-    ]
-    if len(manifest) != through_shard + 1:
-        have = {r["shard_id"] for r in manifest}
-        missing = sorted(set(range(through_shard + 1)) - have)
+    streaming = os.path.exists(os.path.join(path, "stream_state.json"))
+    if streaming:
+        rows = [{"compacted_from": "", **r} for r in read_manifest(path)]
+        if not rows:
+            raise ValueError(f"no committed shards under {path}")
+        for r in rows:
+            covered = str(r["compacted_from"])
+            if covered and any(
+                int(s) > through_shard for s in covered.split(",")
+            ):
+                raise ValueError(
+                    f"snapshot at batch {through_shard} predates compaction "
+                    f"(shard {r['shard_id']} now covers batches {covered})"
+                )
+    else:
+        if not os.path.exists(_config_path(path)):
+            raise ValueError(
+                f"{path} is not a resumable-layout index (no config.json): "
+                "snapshots exist only for build_index_resumable and "
+                "streaming outputs"
+            )
+        cfg = _load_config(path)
+        if not 0 <= through_shard < cfg["n_shards"]:
+            raise ValueError(
+                f"through_shard {through_shard} outside [0, {cfg['n_shards']})"
+            )
+        rows = read_manifest(path)
+    sel = [r for r in rows if r["shard_id"] <= through_shard]
+    # A compacted streaming shard carries every batch it collapsed: expand
+    # its coverage into the committed set, or a snapshot at/after the
+    # compaction point would be rejected for "missing" batches whose rows
+    # now live inside shard 0 (the predates-compaction check above already
+    # rejected snapshots strictly older than the compaction).
+    have = {r["shard_id"] for r in sel}
+    for r in sel:
+        have |= {int(s) for s in str(r.get("compacted_from") or "").split(",") if s}
+    missing = sorted(set(range(through_shard + 1)) - have)
+    if missing:
         raise ValueError(f"uncommitted shards in snapshot prefix: {missing}")
-    doc_hi = manifest[-1]["doc_hi"]
-    postings = (
-        read_table(
-            spark, os.path.join(path, "postings"),
-            base_path=os.path.join(path, "postings"),
+
+    def upto(table: str) -> DataFrame:
+        return (
+            read_shards(spark, path, table)
+            .filter(F.col("shard") <= through_shard)
+            .drop("shard")
         )
-        .filter(F.col("shard") <= through_shard)
-        .drop("shard")
-    )
-    docs = read_table(spark, os.path.join(path, "docs")).filter(
-        F.col("doc_id") < doc_hi
-    )
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
-    n_docs = sum(r["doc_count"] for r in manifest)
-    total_tokens = sum(r["token_count"] for r in manifest)
-    meta = {
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-        "k1": cfg["k1"],
-        "b": cfg["b"],
-        "block_size": cfg["block_size"],
-        "codec": POSTINGS_CODEC,
-        "order_cols": cfg["order_cols"],
-        "version": cfg["version"],
-    }
-    return InvertedIndex(
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        meta=meta,
-        manifest=spark.createDataFrame(manifest),
-        pinned=set(),
+
+    if streaming:
+        meta_path = os.path.join(path, "meta.json")
+        with open(meta_path) as f:
+            meta = check_codec(json.load(f), meta_path)
+        meta.pop("pinned", None)
+        docs = upto("docs")
+    else:
+        meta = _config_meta(cfg)
+        docs = read_table(spark, os.path.join(path, "docs")).filter(
+            F.col("doc_id") < sel[-1]["doc_hi"]
+        )
+    return assemble_index(
+        docs, upto("postings"), meta,
+        n_docs=sum(int(r["doc_count"]) for r in sel),
+        total_tokens=sum(int(r["token_count"]) for r in sel),
+        manifest=spark.createDataFrame(sel),
     )

@@ -22,8 +22,12 @@ Semantics:
   batch overwrites its own shard and re-commits the same manifest row
   (idempotent), the streaming checkpoint handles source offsets.
 - the index is queryable between batches: ``meta.json`` and the terms table
-  are refreshed after every commit (cheap — aggregation over block
-  metadata columns only).
+  are refreshed after every commit through
+  :func:`tsidx.index.assemble_index`, the owner of the derived statistics
+  (cheap — aggregation over block metadata columns only); posting rows
+  come from the build's one encoder (:func:`tsidx.build.build_postings`).
+- snapshot reads at batch K are :func:`tsidx.resume.read_index_at`, which
+  serves both the resumable and the streaming layout.
 """
 
 from __future__ import annotations
@@ -36,17 +40,16 @@ from pyspark.sql import functions as F
 
 from tsidx.build import build_postings
 from tsidx.docids import assign_doc_ids
-from tsidx.index import POSTINGS_CODEC, InvertedIndex, check_codec
-from tsidx.io import read_table, write_table
+from tsidx.index import POSTINGS_CODEC, InvertedIndex, assemble_index, check_codec
+from tsidx.io import commit_json, read_table, write_table
 from tsidx.oracle import B, K1
-from tsidx.resume import read_manifest
+from tsidx.resume import read_manifest, read_shards
 from tsidx.ship import ensure_shipped
 
 __all__ = [
     "append_batch",
     "stream_build",
     "read_stream_index",
-    "read_stream_index_at",
     "compact_stream_index",
     "dedup_stream",
     "conv_rollup_stream",
@@ -181,44 +184,33 @@ def append_batch(
         "compacted_from": "",  # keeps manifest rows schema-uniform
     }
     os.makedirs(os.path.join(path, "manifest"), exist_ok=True)
-    marker = os.path.join(path, "manifest", f"shard-{batch_id}.json")
-    with open(marker + ".tmp", "w") as f:
-        json.dump(row, f, indent=2, sort_keys=True)
-    os.replace(marker + ".tmp", marker)
+    commit_json(os.path.join(path, "manifest", f"shard-{batch_id}.json"), row)
 
     if replay is None:
         state["n_docs"] += n_rows
         state["total_tokens"] += row["token_count"]
         state["next_doc_id"] = base + n_rows
         state["batches"][key] = {"doc_lo": base, "doc_count": n_rows}
-    with open(_state_path(path) + ".tmp", "w") as f:
-        json.dump(state, f, indent=2, sort_keys=True)
-    os.replace(_state_path(path) + ".tmp", _state_path(path))
+    commit_json(_state_path(path), state)
 
-    # refresh queryable metadata (terms table + meta.json)
-    all_postings = read_table(
-        spark, os.path.join(path, "postings"),
-        base_path=os.path.join(path, "postings"),
-    ).drop("shard")
-    terms = all_postings.groupBy("term").agg(F.sum("block_df").alias("df"))
-    write_table(terms, os.path.join(path, "terms"))
-    meta = {
-        "n_docs": state["n_docs"],
-        "total_tokens": state["total_tokens"],
-        "avgdl": (state["total_tokens"] / state["n_docs"]) if state["n_docs"] else 0.0,
-        "k1": K1,
-        "b": B,
-        "block_size": int(block_size),
-        "codec": POSTINGS_CODEC,
-        "order_cols": list(order_cols),
-        "pinned": [],
-        "version": 1,
-        "streaming": True,
-    }
-    mp = os.path.join(path, "meta.json")
-    with open(mp + ".tmp", "w") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
-    os.replace(mp + ".tmp", mp)
+    # refresh queryable metadata (terms table + meta.json); docs stay on
+    # disk, only the derived tables are written
+    refreshed = assemble_index(
+        None,
+        read_shards(spark, path, "postings").drop("shard"),
+        {
+            "k1": K1,
+            "b": B,
+            "block_size": int(block_size),
+            "order_cols": list(order_cols),
+            "version": 1,
+            "streaming": True,
+        },
+        n_docs=state["n_docs"],
+        total_tokens=state["total_tokens"],
+    )
+    write_table(refreshed.terms, os.path.join(path, "terms"))
+    commit_json(os.path.join(path, "meta.json"), {**refreshed.meta, "pinned": []})
 
 
 def stream_build(
@@ -288,8 +280,8 @@ def compact_stream_index(
 
     post_dir = os.path.join(path, "postings")
     docs_dir = os.path.join(path, "docs")
-    postings = read_table(spark, post_dir, base_path=post_dir).drop("shard")
-    docs = read_table(spark, docs_dir, base_path=docs_dir).drop("shard")
+    postings = read_shards(spark, path, "postings").drop("shard")
+    docs = read_shards(spark, path, "docs").drop("shard")
 
     tmp_post = os.path.join(path, "postings._compact")
     tmp_docs = os.path.join(path, "docs._compact")
@@ -330,15 +322,10 @@ def compact_stream_index(
         old = os.path.join(man_dir, f"shard-{sid}.json")
         if sid != 0 and os.path.exists(old):
             os.remove(old)
-    marker = os.path.join(man_dir, "shard-0.json")
-    with open(marker + ".tmp", "w") as f:
-        json.dump(row, f, indent=2, sort_keys=True)
-    os.replace(marker + ".tmp", marker)
+    commit_json(os.path.join(man_dir, "shard-0.json"), row)
 
     state["compacted_through"] = max(shard_ids)
-    with open(state_p + ".tmp", "w") as f:
-        json.dump(state, f, indent=2, sort_keys=True)
-    os.replace(state_p + ".tmp", state_p)
+    commit_json(state_p, state)
     return row
 
 
@@ -352,100 +339,12 @@ def read_stream_index(spark, path: str) -> InvertedIndex:
         {"compacted_from": "", **r} for r in read_manifest(path)
     ]  # uniform schema across pre-/post-compaction manifest rows
     return InvertedIndex(
-        docs=read_table(
-            spark, os.path.join(path, "docs"),
-            base_path=os.path.join(path, "docs"),
-        ).drop("shard"),
-        postings=read_table(
-            spark, os.path.join(path, "postings"),
-            base_path=os.path.join(path, "postings"),
-        ).drop("shard"),
+        docs=read_shards(spark, path, "docs").drop("shard"),
+        postings=read_shards(spark, path, "postings").drop("shard"),
         terms=read_table(spark, os.path.join(path, "terms")),
         meta=meta,
         manifest=spark.createDataFrame(rows) if rows else None,
         pinned=pinned,
-    )
-
-
-def read_stream_index_at(spark, path: str, through_batch: int) -> InvertedIndex:
-    """Time-travel read of a streaming-built index: the state exactly as
-    of micro-batch *through_batch*'s commit marker — the streaming twin
-    of :func:`tsidx.resume.read_index_at`.
-
-    Shard partitioning doubles as the snapshot axis: docs and postings
-    are partition-pruned to ``shard <= through_batch`` (scan-level, via
-    the ``shard=K`` layout), the dictionary is re-aggregated over the
-    surviving postings, and BM25 stats are summed from the committed
-    per-batch lineage rows. Batches commit in order, so a snapshot is
-    the strict prefix of manifest markers; a missing marker in the
-    prefix is rejected, and so is any snapshot older than a compaction
-    point (compaction rewrites the prefix into one shard — earlier
-    states no longer exist on disk).
-    """
-    from tsidx.resume import read_manifest as _read_manifest
-
-    rows = _read_manifest(path)
-    if not rows:
-        raise ValueError(f"no committed shards under {path}")
-    for r in rows:
-        covered = str(r.get("compacted_from") or "")
-        if covered and any(
-            int(s) > through_batch for s in covered.split(",")
-        ):
-            raise ValueError(
-                f"snapshot at batch {through_batch} predates compaction "
-                f"(shard {r['shard_id']} now covers batches {covered})"
-            )
-    sel = [r for r in rows if int(r["shard_id"]) <= through_batch]
-    have = {int(r["shard_id"]) for r in sel}
-    # A compacted shard carries every batch it collapsed: expand its
-    # coverage into the committed set, or a snapshot at/after the
-    # compaction point would be rejected for "missing" batches whose
-    # rows now live inside shard 0 (the predates-compaction check above
-    # already rejected snapshots strictly older than the compaction).
-    for r in sel:
-        covered = str(r.get("compacted_from") or "")
-        if covered:
-            have |= {int(s) for s in covered.split(",") if s}
-    missing = sorted(set(range(through_batch + 1)) - have)
-    if missing:
-        raise ValueError(f"uncommitted batches in snapshot prefix: {missing}")
-    meta_path = os.path.join(path, "meta.json")
-    with open(meta_path) as f:
-        meta = check_codec(json.load(f), meta_path)
-    meta.pop("pinned", None)
-    n_docs = sum(int(r["doc_count"]) for r in sel)
-    total_tokens = sum(int(r["token_count"]) for r in sel)
-    meta.update(
-        n_docs=n_docs,
-        total_tokens=total_tokens,
-        avgdl=(total_tokens / n_docs) if n_docs else 0.0,
-    )
-    postings = (
-        read_table(
-            spark, os.path.join(path, "postings"),
-            base_path=os.path.join(path, "postings"),
-        )
-        .filter(F.col("shard") <= through_batch)
-        .drop("shard")
-    )
-    docs = (
-        read_table(
-            spark, os.path.join(path, "docs"),
-            base_path=os.path.join(path, "docs"),
-        )
-        .filter(F.col("shard") <= through_batch)
-        .drop("shard")
-    )
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
-    uniform = [{"compacted_from": "", **r} for r in sel]
-    return InvertedIndex(
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        meta=meta,
-        manifest=spark.createDataFrame(uniform),
-        pinned=set(),
     )
 
 

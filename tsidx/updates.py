@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsidx.index import InvertedIndex
+from tsidx.index import InvertedIndex, assemble_index
 
 __all__ = ["update_docs"]
 
@@ -90,23 +90,11 @@ def update_docs(index: InvertedIndex, updates) -> InvertedIndex:
     postings = untouched.unionByName(rebuilt)
 
     # 3. re-derive dictionary and corpus statistics
-    terms = postings.groupBy("term").agg(F.sum("block_df").alias("df"))
     stats = postings.agg(F.sum("sum_tf").alias("total_tokens")).collect()[0]
-    total_tokens = int(stats["total_tokens"] or 0)
-    n_docs = int(index.meta["n_docs"])
-    meta = dict(index.meta)
-    meta.update(
-        {
-            "total_tokens": total_tokens,
-            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-        }
-    )
-    return InvertedIndex(
-        docs=docs,
-        postings=postings,
-        terms=terms,
-        meta=meta,
+    return assemble_index(
+        docs, postings, index.meta,
+        n_docs=index.meta["n_docs"],
+        total_tokens=stats["total_tokens"] or 0,
         manifest=index.manifest,
-        pinned=set(index.pinned),
-        tombstones=None,
+        pinned=index.pinned,
     )

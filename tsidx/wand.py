@@ -160,7 +160,7 @@ def _check_k(k: int) -> int:
     return int(k)
 
 
-def _idfs(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
+def term_idfs(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
     """BM25 idf of each of *terms* in the index (unknown terms dropped):
     one |terms|-row collect of the terms table."""
     if not terms:
@@ -188,7 +188,7 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int) -> DataFrame
     if k == 0:
         return spark.createDataFrame([], _SCORE_SCHEMA)
     ensure_shipped(spark)
-    idfs = _idfs(index, query_terms(query))
+    idfs = term_idfs(index, query_terms(query))
     if not idfs:
         return spark.createDataFrame([], _SCORE_SCHEMA)
     cand = _with_dead(index.postings.filter(F.col("term").isin(sorted(idfs))), index)
@@ -231,7 +231,7 @@ def wand_topk_batch(
         return spark.createDataFrame([], _BATCH_SCORE_SCHEMA)
     ensure_shipped(spark)
     per_q = {qid: query_terms(q) for qid, q in queries.items()}
-    idf_all = _idfs(index, sorted({t for ts in per_q.values() for t in ts}))
+    idf_all = term_idfs(index, sorted({t for ts in per_q.values() for t in ts}))
     idfs_by_query = {
         qid: {t: idf_all[t] for t in ts if t in idf_all}
         for qid, ts in per_q.items()
