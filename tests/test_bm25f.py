@@ -1,6 +1,6 @@
 """BM25F field-weighted ranking vs brute-force ground truth.
 
-Two fields over the sonnets corpus: ``body`` (the sonnet text) and a
+Two fields over the seeded stand-in corpus: ``body`` (the text) and a
 synthetic ``title`` stream (deterministic words derived from doc_id, so
 titles overlap query vocabulary for some docs only).
 """
@@ -21,9 +21,9 @@ def title_of(i: int) -> str:
 
 
 @pytest.fixture(scope="module")
-def field_engines(spark, sonnets):
-    rows_body = [(f"c{i:04d}", 0, t) for i, t in enumerate(sonnets)]
-    rows_title = [(f"c{i:04d}", 0, title_of(i)) for i in range(len(sonnets))]
+def field_engines(spark, standin_texts):
+    rows_body = [(f"c{i:04d}", 0, t) for i, t in enumerate(standin_texts)]
+    rows_title = [(f"c{i:04d}", 0, title_of(i)) for i in range(len(standin_texts))]
     schema = "conv_id string, turn_idx int, text string"
     body = build_index(
         spark.createDataFrame(rows_body, schema), num_partitions=4
@@ -34,10 +34,10 @@ def field_engines(spark, sonnets):
     return {"body": QueryEngine(body), "title": QueryEngine(title)}
 
 
-def _brute_bm25f(sonnets, query, weights, k1=1.2, b=0.75, k=10):
-    texts = {"body": list(sonnets), "title": [title_of(i) for i in range(len(sonnets))]}
+def _brute_bm25f(standin_texts, query, weights, k1=1.2, b=0.75, k=10):
+    texts = {"body": list(standin_texts), "title": [title_of(i) for i in range(len(standin_texts))]}
     fields = sorted(texts)
-    n = len(sonnets)
+    n = len(standin_texts)
     tfs, dls, avgdls = {}, {}, {}
     for f in fields:
         tfs[f] = [term_freqs(t)[0] for t in texts[f]]
@@ -77,12 +77,12 @@ def _brute_bm25f(sonnets, query, weights, k1=1.2, b=0.75, k=10):
         ("sonnet", {"body": 2.0, "title": 1.0}),
     ],
 )
-def test_bm25f_matches_bruteforce(field_engines, sonnets, query, weights):
+def test_bm25f_matches_bruteforce(field_engines, standin_texts, query, weights):
     got = [
         (r["doc_id"], r["score"])
         for r in bm25f_topk(field_engines, weights, query, 10).collect()
     ]
-    want = _brute_bm25f(sonnets, query, weights)
+    want = _brute_bm25f(standin_texts, query, weights)
     assert [d for d, _ in got] == [d for d, _ in want], (got[:3], want[:3])
     for (gd, gs), (_, ws) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-12), (gd, gs, ws)

@@ -73,12 +73,44 @@ def test_random_queries_rank_identical(built):
         assert got_s == want, (q, k, "bm25_scores")
 
 
-def test_topk_k_zero_and_negative(built):
-    """k == 0 is an empty page and k < 0 an error."""
+def test_topk_k_zero_and_negative(built, spark):
+    """On every top-k, k == 0 is an empty page and k < 0 a ValueError
+    raised before any Spark job runs."""
+    from tsidx.champion import champion_lists, champion_topk
+    from tsidx.positions import positional_postings
+    from tsidx.sdm import sdm_topk
+
     idx, _ = built
-    assert wand_topk(idx, "fire running", 0).collect() == []
-    with pytest.raises(ValueError):
-        wand_topk(idx, "fire running", -1)
+    eng = QueryEngine(idx)
+    champions = champion_lists(eng, 4)
+    positional = positional_postings(idx.docs.select("doc_id", "text"), block_size=32)
+    q = "fire running"
+    rankers = {
+        "wand_topk": lambda k: wand_topk(idx, q, k),
+        "bm25_plus_topk": lambda k: eng.bm25_plus_topk(q, k),
+        "lm_dirichlet_topk": lambda k: eng.lm_dirichlet_topk(q, k),
+        "lm_jm_topk": lambda k: eng.lm_jm_topk(q, k),
+        "pl2_topk": lambda k: eng.pl2_topk(q, k),
+        "rm3_topk": lambda k: eng.rm3_topk(q, k),
+        "bm25_topk_expanded": lambda k: eng.bm25_topk_expanded(q, {"fire": ["burning"]}, k),
+        "bm25_topk_where": lambda k: eng.bm25_topk_where(q, k, F.col("role") == "user"),
+        "bm25_topk_after": lambda k: eng.bm25_topk_after(q, k, (0, 1e9)),
+        "bm25_topk_decayed": lambda k: eng.bm25_topk_decayed(q, k, "2026-02-01T00:00:00"),
+        "more_like_this": lambda k: eng.more_like_this(0, k),
+        "champion_topk": lambda k: champion_topk(eng, champions, q, k),
+        "sdm_topk": lambda k: sdm_topk(eng, positional, q, k),
+    }
+    sc = spark.sparkContext
+    for name, topk in rankers.items():
+        assert topk(0).collect() == [], name
+    sc.setJobGroup("k_guard", "k < 0 must fail before any job")
+    try:
+        for name, topk in rankers.items():
+            with pytest.raises(ValueError):
+                topk(-1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("k_guard")) == []
 
 
 def test_random_dictionary_expansion_modes(built):

@@ -1,9 +1,10 @@
-"""Spark engine vs single-node oracle: rank identity on the sonnets corpus.
+"""Spark engine vs single-node oracle: rank identity on the seeded
+stand-in corpus, plus the literal sonnets goldens on the reference corpus.
 
-The transcripts fixture maps the 154 reference sonnets onto the
-(conv_id, turn_idx) transcript schema (FIXTURES.md §1a); docID order under
-(conv_id, turn_idx) equals the reference's insertion order, so all goldens
-carry over verbatim.
+The transcripts fixtures map the 154 texts onto the (conv_id, turn_idx)
+transcript schema (FIXTURES.md §1a); docID order under (conv_id, turn_idx)
+equals insertion order, so every comparison with the oracle holds on
+either corpus. Only the two golden tests need the reference sonnets.
 """
 
 import pytest
@@ -15,42 +16,53 @@ from tsidx.query import QueryEngine
 GOLDEN_QUERIES = ["same", "thrall quench", "fire heat", "love", "zzzunknown", ""]
 
 
-@pytest.fixture(scope="module")
-def built(spark, sonnets_transcripts):
-    idx = build_index(
-        sonnets_transcripts,
+def _build(transcripts):
+    return build_index(
+        transcripts,
         block_size=64,  # small blocks: force multi-block terms at 154 docs
         num_partitions=4,
     )
-    return idx
 
 
 @pytest.fixture(scope="module")
-def oracle(sonnets):
+def built(spark, standin_transcripts):
+    return _build(standin_transcripts)
+
+
+@pytest.fixture(scope="module")
+def oracle(standin_texts):
     o = OracleIndex()
-    o.add_corpus(sonnets)
+    o.add_corpus(standin_texts)
     return o
 
 
-def test_statistics_match_reference_goldens(built):
-    assert built.statistics() == {
+@pytest.fixture(scope="module")
+def sonnets_built(spark, sonnets_transcripts):
+    return _build(sonnets_transcripts)
+
+
+def test_statistics_match_reference_goldens(sonnets_built):
+    assert sonnets_built.statistics() == {
         "num_documents": 154,
         "num_unique_terms": 4034,
         "num_postings": 13044,
     }
 
 
-def test_df_table_head(built, oracle):
-    got = [(r["term"], r["df"]) for r in built.document_frequencies().limit(5).collect()]
+def test_df_table_head(sonnets_built):
+    got = [
+        (r["term"], r["df"])
+        for r in sonnets_built.document_frequencies().limit(5).collect()
+    ]
     assert got == [("sonnet", 154), ("and", 148), ("to", 146), ("in", 139), ("the", 135)]
 
 
-def test_doc_text_roundtrip(built, sonnets):
+def test_doc_text_roundtrip(built, standin_texts):
     """Per-turn text equality with the source table (input_hint invariant)."""
     rows = built.docs.orderBy("doc_id").select("doc_id", "text").collect()
-    assert len(rows) == len(sonnets)
+    assert len(rows) == len(standin_texts)
     for r in rows:
-        assert r["text"] == sonnets[r["doc_id"]]
+        assert r["text"] == standin_texts[r["doc_id"]]
 
 
 @pytest.mark.parametrize("query", GOLDEN_QUERIES)
@@ -181,7 +193,7 @@ def test_bm25_search_after_tie_cursor(built, oracle):
     assert got == allr[idx + 1 : idx + 6]
 
 
-def test_bm25_decayed_matches_bruteforce(built, oracle, sonnets):
+def test_bm25_decayed_matches_bruteforce(built, oracle, standin_texts):
     import math
 
     engine = QueryEngine(built)
@@ -276,11 +288,11 @@ def test_bm25_expanded_unused_group_ignored(built, oracle):
     assert got == base
 
 
-def _mlt_bruteforce(oracle, sonnets, doc_id, k, m):
+def _mlt_bruteforce(oracle, standin_texts, doc_id, k, m):
     from tsidx.oracle import K1, B, bm25_idf
     from tsidx.tokenize import term_freqs
 
-    tfs, _dl = term_freqs(sonnets[doc_id])
+    tfs, _dl = term_freqs(standin_texts[doc_id])
     n = oracle.n_docs
     avgdl = sum(oracle.doc_lengths.values()) / n
     idfs = {
@@ -305,13 +317,13 @@ def _mlt_bruteforce(oracle, sonnets, doc_id, k, m):
 
 
 @pytest.mark.parametrize("doc_id,m", [(17, 10), (0, 5), (153, 25)])
-def test_more_like_this_matches_bruteforce(built, oracle, sonnets, doc_id, m):
+def test_more_like_this_matches_bruteforce(built, oracle, standin_texts, doc_id, m):
     engine = QueryEngine(built)
     got = [
         (r["doc_id"], r["score"])
         for r in engine.more_like_this(doc_id, k=10, m=m).collect()
     ]
-    want = _mlt_bruteforce(oracle, sonnets, doc_id, 10, m)
+    want = _mlt_bruteforce(oracle, standin_texts, doc_id, 10, m)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (_, ws) in zip(got, want):
         assert gs == ws, (gd, gs, ws)
@@ -433,7 +445,7 @@ def test_complete_prefix_matches_bruteforce(built, oracle, prefix, k):
 
 @pytest.mark.parametrize("query,window", [("quench", 1), ("same", 2), ("love", 0)])
 def test_match_with_context_matches_bruteforce(built, oracle, query, window):
-    # conftest maps 10 sonnets per conversation: conv = doc_id // 10
+    # conftest maps 10 texts per conversation: conv = doc_id // 10
     engine = QueryEngine(built)
     anchors = oracle.match(query)
     want = sorted(

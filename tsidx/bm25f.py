@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.oracle import bm25_idf
+from tsidx.query import fold_sum, sum_contribs, term_map
 from tsidx.tokenize import query_terms
+from tsidx.wand import _check_k, _empty_scores, top_k
 
 __all__ = ["bm25f_scores", "bm25f_topk"]
 
@@ -58,7 +60,7 @@ def bm25f_scores(
     spark = any_eng.index.docs.sparkSession
     terms = query_terms(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(spark)
     n_docs = int(any_eng.index.meta["n_docs"])
 
     def b_of(f: str) -> float:
@@ -95,35 +97,17 @@ def bm25f_scores(
     )
     idfs = {r["term"]: bm25_idf(n_docs, r["df"]) for r in df_rows}
     if not idfs:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf_map = F.create_map(
-        *[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])]
-    )
+        return _empty_scores(spark)
+    idf_map = term_map(idfs)
 
     # tf~ per (term, doc): sum field parts in fixed field order (the field
     # tag sorts the struct list) so the float sum never depends on union
     # arrival order
-    tft = allf.groupBy("term", "doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("field", "tfb"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["tfb"],
-        ).alias("tft")
-    )
+    tft = allf.groupBy("term", "doc_id").agg(fold_sum("field", "tfb").alias("tft"))
     contrib = idf_map[F.col("term")] * (
         F.col("tft") / (F.lit(float(k1)) + F.col("tft"))
     )
-    return (
-        tft.withColumn("contrib", contrib)
-        .groupBy("doc_id")
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score")
-        )
-    )
+    return sum_contribs(tft, contrib)
 
 
 def bm25f_topk(
@@ -135,8 +119,5 @@ def bm25f_topk(
     b: float | dict[str, float] = 0.75,
 ) -> DataFrame:
     """Deterministic BM25F top-k by (-score, doc_id)."""
-    return (
-        bm25f_scores(engines, weights, query, k1=k1, b=b)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-    )
+    _check_k(k)
+    return top_k(bm25f_scores(engines, weights, query, k1=k1, b=b), k)

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tsidx.query import bm25_wtf
+from tsidx.query import bm25_wtf, sum_contribs
+from tsidx.wand import _check_k, _empty_scores, top_k
 
 __all__ = ["champion_lists", "champion_topk", "champion_topk_rescored"]
 
@@ -64,28 +65,16 @@ def champion_topk(
     ``term IN`` filter, contribution expression, and sorted-term fold
     as :meth:`QueryEngine.bm25_scores`, just over the m-bounded
     artifact instead of the posting blocks."""
+    _check_k(k)
     terms = sorted(set(engine.terms_of(query)))
-    spark = engine.index.docs.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(engine.index.docs.sparkSession)
     idfs = engine.query_idfs(terms)
     rows = engine._live(
         champions.filter(F.col("term").isin(list(idfs)))
     )
     _, contrib = engine._contrib_expr(idfs)
-    return (
-        rows.withColumn("contrib", contrib)
-        .groupBy("doc_id")
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-    )
+    return top_k(sum_contribs(rows, contrib), k)
 
 
 def champion_topk_rescored(
@@ -107,18 +96,13 @@ def champion_topk_rescored(
     so a FIXED realistic m holds recall at any corpus size — misses
     require a top-k doc championed by NO query term.
     """
+    _check_k(k)
     terms = sorted(set(engine.terms_of(query)))
-    spark = engine.index.docs.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(engine.index.docs.sparkSession)
     cand = (
         champions.filter(F.col("term").isin(terms))
         .select("doc_id")
         .distinct()
     )
-    return (
-        engine.bm25_scores(query)
-        .join(cand, "doc_id", "semi")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-    )
+    return top_k(engine.bm25_scores(query).join(cand, "doc_id", "semi"), k)

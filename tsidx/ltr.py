@@ -34,7 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsidx.query import bm25_wtf
+from tsidx.query import bm25_wtf, fold_sum, lm_dirichlet_contrib
+from tsidx.wand import term_cfs
 
 __all__ = ["ltr_features"]
 
@@ -57,15 +58,7 @@ def ltr_features(
         return spark.createDataFrame([], schema)
     c_tokens = float(engine.index.meta["total_tokens"])
     mu = float(mu)
-    # cf (collection frequency) per term from posting-block metadata —
-    # |terms|-bounded driver collect, no posting decode
-    cfs = {
-        r["term"]: float(r["cf"])
-        for r in engine._blocks_for(sorted(idfs))
-        .groupBy("term")
-        .agg(F.sum("sum_tf").alias("cf"))
-        .collect()
-    }
+    cfs = term_cfs(engine.index, sorted(idfs))
     fan = spark.createDataFrame(
         [
             (qid, len(ts), t, idfs[t], cfs[t])
@@ -76,24 +69,11 @@ def ltr_features(
         "query_id string, n_query_terms int, term string, idf double, cf double",
     )
     rows = engine._live(engine.posting_rows(sorted(idfs)))
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    lmd_c = F.log(
-        F.lit(1.0) + tf / (F.lit(mu) * (F.col("cf") / F.lit(c_tokens)))
-    ) + F.log(F.lit(mu) / (F.lit(mu) + dl))
-
-    def _fold(col: str):
-        return F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", F.col(col)))),
-            F.lit(0.0),
-            lambda acc, x: acc + x[col],
-        )
-
     joined = (
         rows.join(F.broadcast(fan), "term")
         .withColumn("contrib", F.col("idf") * bm25_wtf(engine.index.meta))
-        .withColumn("tfidf", tf * F.col("idf"))
-        .withColumn("lmd_c", lmd_c)
+        .withColumn("tfidf", F.col("tf").cast("double") * F.col("idf"))
+        .withColumn("lmd_c", lm_dirichlet_contrib(F.col("cf"), mu, c_tokens))
     )
     return joined.groupBy("query_id", "doc_id").agg(
         F.first("n_query_terms").alias("n_query_terms"),
@@ -102,8 +82,8 @@ def ltr_features(
         F.sum("tf").cast("long").alias("sum_tf"),
         F.min("tf").cast("int").alias("min_tf"),
         F.max("tf").cast("int").alias("max_tf"),
-        _fold("idf").alias("sum_idf"),
-        _fold("tfidf").alias("sum_tfidf"),
-        _fold("contrib").alias("bm25"),
-        _fold("lmd_c").alias("lmd"),
+        fold_sum("term", "idf").alias("sum_idf"),
+        fold_sum("term", "tfidf").alias("sum_tfidf"),
+        fold_sum("term", "contrib").alias("bm25"),
+        fold_sum("term", "lmd_c").alias("lmd"),
     )

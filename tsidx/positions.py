@@ -299,6 +299,7 @@ def phrase_bm25_topk(
     """
     from tsidx.oracle import bm25_idf
     from tsidx.query import bm25_wtf
+    from tsidx.wand import top_k
 
     spark = positional.sparkSession
     # tombstone filter BEFORE the df count: deleted docs must contribute
@@ -314,13 +315,11 @@ def phrase_bm25_topk(
     dl_rows = engine.posting_rows([first_term]).select("doc_id", "dl")
     idf = bm25_idf(int(engine.index.meta["n_docs"]), df_p)
     score = F.lit(idf) * bm25_wtf(engine.index.meta, tf="n_occ")
-    return (
-        counts.join(dl_rows, "doc_id")
-        .select(
+    return top_k(
+        counts.join(dl_rows, "doc_id").select(
             "doc_id", F.col("n_occ").cast("long").alias("tf"), score.alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
+        ),
+        k,
     )
 
 
@@ -489,6 +488,8 @@ def proximity_boosted_topk(
     deterministic TakeOrdered. No new shuffle shape beyond the two
     composed operators.
     """
+    from tsidx.wand import top_k
+
     prox = proximity_counts(positional, term_a, term_b, slop).select(
         "doc_id", "n_pairs"
     )
@@ -508,11 +509,7 @@ def proximity_boosted_topk(
             ),
         )
     )
-    return (
-        boosted.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-        .select("doc_id", "score", "n_pairs")
-    )
+    return top_k(boosted, k).select("doc_id", "score", "n_pairs")
 
 
 def kwic(

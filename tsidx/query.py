@@ -16,6 +16,14 @@ Semantics bound to the reference:
   contributions use the same double-precision expression shape as the
   oracle; per-doc sums are accumulated in sorted-term order via
   ``aggregate(sort_array(collect_list))`` (never shuffle-arrival order).
+- One scoring skeleton serves every JVM ranking model (BM25 and its
+  weighted / expanded / BM25+ forms, LM-Dirichlet, LM-JM, PL2):
+  :func:`sum_contribs` folds a model's contribution column per doc with
+  :func:`fold_sum`, and :func:`tsidx.wand.top_k` cuts the page. Per-term
+  statistics reach the plan as driver literal maps (:func:`term_map`):
+  idf from :func:`tsidx.wand.term_idfs`, and collection frequency from
+  :func:`tsidx.wand.term_cfs` (block ``sum_tf`` metadata, no broadcast
+  join).
 
 Physical behavior: the only data read is the posting blocks of the query's
 terms — ``term IN (...)`` is pushed to the parquet/Iceberg scan (blocks are
@@ -30,7 +38,7 @@ from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
 from tsidx.tokenize import query_terms
-from tsidx.wand import term_idfs
+from tsidx.wand import _check_k, _empty_scores, term_cfs, term_idfs, top_k, top_k_per
 
 __all__ = ["QueryEngine"]
 
@@ -130,6 +138,47 @@ def bm25_wtf(meta: dict, tf: str = "tf", dl: str = "dl"):
     )
 
 
+def lm_dirichlet_contrib(cf, mu: float, c_tokens: float):
+    """THE per-(doc, term) Dirichlet query-likelihood weight
+    ``ln(1 + tf / (mu · cf / C)) + ln(mu / (mu + dl))`` over the tf / dl
+    columns and the *cf* column: :meth:`QueryEngine.lm_dirichlet_scores`
+    and the LTR ``lmd`` feature are bit-identical because both evaluate
+    this one expression tree."""
+    tf = F.col("tf").cast("double")
+    dl = F.col("dl").cast("double")
+    return F.log(
+        F.lit(1.0) + tf / (F.lit(mu) * (cf / F.lit(c_tokens)))
+    ) + F.log(F.lit(mu) / (F.lit(mu) + dl))
+
+
+def term_map(values: dict[str, float]):
+    """A literal term -> value map column (keys in sorted order): how a
+    driver-side per-term statistic (idf, cf, weight) reaches the plan."""
+    return F.create_map(*[F.lit(x) for t in sorted(values) for x in (t, values[t])])
+
+
+def fold_sum(key: str, val: str):
+    """THE per-group float sum of *val* in ascending *key* order,
+    ``aggregate(sort_array(collect_list(struct(key, val))), 0.0, +)``:
+    a score never depends on shuffle arrival order (SURVEY §7.2)."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(F.struct(key, val))),
+        F.lit(0.0),
+        lambda acc, x: acc + x[val],
+    )
+
+
+def sum_contribs(rows: DataFrame, contrib, keys=("doc_id",)) -> DataFrame:
+    """``(*keys, score)``: the per-(term, doc) *contrib* column summed per
+    *keys* in sorted-term order — the scoring skeleton of every JVM
+    ranking model, each of which is only its contribution expression."""
+    return (
+        rows.withColumn("contrib", contrib)
+        .groupBy(*keys)
+        .agg(fold_sum("term", "contrib").alias("score"))
+    )
+
+
 class QueryEngine:
     def __init__(self, index: InvertedIndex):
         from tsidx.ship import ensure_shipped
@@ -181,9 +230,7 @@ class QueryEngine:
         ``bm25_scores``, ``explain_scores`` (sum of contribs == score) and
         the single-node oracle agree bit for bit because every path
         evaluates this exact IEEE754 expression shape."""
-        idf_map = F.create_map(
-            *[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])]
-        )
+        idf_map = term_map(idfs)
         return idf_map, idf_map[F.col("term")] * bm25_wtf(self.index.meta)
 
     def query_idfs(self, terms: list[str]) -> dict[str, float]:
@@ -196,18 +243,7 @@ class QueryEngine:
     def match(self, query: str | list[str]) -> DataFrame:
         """Disjunctive match; one ``doc_id`` column in ascending (insertion)
         order. Reference ``Index.match`` (``inverted_index.py:71-101``)."""
-        spark = self.index.docs.sparkSession
-        hits = (
-            self.posting_doc_ids(self._blocks_for(self.terms_of(query)))
-            .select("doc_id")
-            .distinct()
-        )
-        if self.index.pinned:
-            pinned = spark.createDataFrame(
-                [(d,) for d in sorted(self.index.pinned)], "doc_id long"
-            )
-            hits = hits.unionByName(pinned).distinct()
-        return self._live(hits).orderBy("doc_id")
+        return self._match_term_list(self.terms_of(query))
 
     def match_all(self, query: str | list[str]) -> DataFrame:
         """Conjunctive match (posting-list intersection): docs containing
@@ -250,10 +286,7 @@ class QueryEngine:
         )
         hits = counts.filter(F.col("n_matched") >= max(m, 1))
         if self.index.pinned:
-            pinned = spark.createDataFrame(
-                [(d,) for d in sorted(self.index.pinned)], "doc_id long"
-            )
-            pinned_counts = pinned.join(counts, "doc_id", "left").select(
+            pinned_counts = self._pinned_df().join(counts, "doc_id", "left").select(
                 "doc_id",
                 F.coalesce(F.col("n_matched"), F.lit(0).cast("long")).alias(
                     "n_matched"
@@ -349,11 +382,8 @@ class QueryEngine:
         syn_weight: float = 0.5,
     ) -> DataFrame:
         """Deterministic top-k over the synonym-expanded scores."""
-        return (
-            self.bm25_scores_expanded(query, synonyms, syn_weight)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
-        )
+        _check_k(k)
+        return top_k(self.bm25_scores_expanded(query, synonyms, syn_weight), k)
 
     def _bm25_scores_terms(
         self, terms: list[str], weights: dict[str, float] | None = None
@@ -363,33 +393,13 @@ class QueryEngine:
         lists must not pass through ``terms_of`` again). Optional per-term
         *weights* scale each term's contribution (``w · (idf · wtf)``)."""
         idfs = self.query_idfs(terms)
-        spark = self.index.docs.sparkSession
         if not idfs:
-            return spark.createDataFrame([], "doc_id long, score double")
-        rows = self._live(self.posting_rows(sorted(idfs)))
-        idf_map, contrib = self._contrib_expr(idfs)
+            return _empty_scores(self.index.docs.sparkSession)
+        _, contrib = self._contrib_expr(idfs)
         if weights is not None:
-            w_map = F.create_map(
-                *[
-                    F.lit(x)
-                    for t in sorted(idfs)
-                    for x in (t, float(weights.get(t, 1.0)))
-                ]
-            )
-            contrib = w_map[F.col("term")] * contrib
-        # Canonical accumulation: sum contributions in sorted-term order so
-        # float results do not depend on shuffle arrival order (SURVEY §7.2).
-        return (
-            rows.withColumn("contrib", contrib)
-            .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
-        )
+            w = {t: float(weights.get(t, 1.0)) for t in idfs}
+            contrib = term_map(w)[F.col("term")] * contrib
+        return sum_contribs(self._live(self.posting_rows(sorted(idfs))), contrib)
 
     def bm25_topk(self, query: str | list[str], k: int) -> DataFrame:
         """Deterministic BM25 top-k by (-score, doc_id), bit-identical to
@@ -412,31 +422,18 @@ class QueryEngine:
         ``idf·δ`` lands as ``contrib + idf·δ`` (exact operand order
         mirrored in the DuckDB twin)."""
         idfs = self.query_idfs(self.terms_of(query))
-        spark = self.index.docs.sparkSession
         if not idfs:
-            return spark.createDataFrame([], "doc_id long, score double")
-        rows = self._live(self.posting_rows(sorted(idfs)))
+            return _empty_scores(self.index.docs.sparkSession)
         idf_map, contrib = self._contrib_expr(idfs)
         plus = contrib + idf_map[F.col("term")] * F.lit(float(delta))
-        return (
-            rows.withColumn("contrib", plus)
-            .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
-        )
+        return sum_contribs(self._live(self.posting_rows(sorted(idfs))), plus)
 
     def bm25_plus_topk(
         self, query: str | list[str], k: int, delta: float = 0.5
     ) -> DataFrame:
         """Deterministic BM25+ top-k by (-score, doc_id)."""
-        return self.bm25_plus_scores(query, delta).orderBy(
-            F.desc("score"), F.asc("doc_id")
-        ).limit(k)
+        _check_k(k)
+        return top_k(self.bm25_plus_scores(query, delta), k)
 
     def rm3_topk(
         self,
@@ -477,19 +474,11 @@ class QueryEngine:
             # Python's banker's rounding
             return math.floor(x * 1e6 + 0.5) / 1e6
 
-        spark = self.index.docs.sparkSession
+        _check_k(k)
         q_terms = sorted(set(self.terms_of(query)))
         if not q_terms:
-            return spark.createDataFrame([], "doc_id long, score double")
-        first = self.bm25_scores(query).select(
-            "doc_id", F.round("score", 4).alias("score_r")
-        )
-        fb_rows = (
-            first.orderBy(F.desc("score_r"), F.asc("doc_id"))
-            .limit(int(fb_docs))
-            .collect()
-        )
-        score_by = {r["doc_id"]: float(r["score_r"]) for r in fb_rows}
+            return _empty_scores(self.index.docs.sparkSession)
+        score_by = self._feedback_scores(query, fb_docs)
         rmw: dict[str, float] = {}
         if score_by:
             texts = (
@@ -519,11 +508,16 @@ class QueryEngine:
             )
             for t in sorted(set(q_terms) | set(exp_p))
         }
-        return (
-            self._bm25_scores_terms(sorted(weights), weights=weights)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
+        return top_k(self._bm25_scores_terms(sorted(weights), weights=weights), k)
+
+    def _feedback_scores(self, query: str | list[str], fb_docs: int) -> dict:
+        """doc_id -> BM25 score rounded@4 of the query's top *fb_docs*
+        docs by (rounded score desc, doc_id): the feedback set of
+        :meth:`rm3_topk` and :meth:`clarity_score` (a bounded collect)."""
+        first = self.bm25_scores(query).select(
+            "doc_id", F.round("score", 4).alias("score")
         )
+        return {r["doc_id"]: float(r["score"]) for r in top_k(first, fb_docs).collect()}
 
     def clarity_score(
         self, query: str | list[str], fb_docs: int = 10
@@ -561,14 +555,7 @@ class QueryEngine:
         q_terms = sorted(set(self.terms_of(query)))
         if not q_terms:
             return spark.createDataFrame([], schema)
-        fb_rows = (
-            self.bm25_scores(query)
-            .select("doc_id", F.round("score", 4).alias("score_r"))
-            .orderBy(F.desc("score_r"), F.asc("doc_id"))
-            .limit(int(fb_docs))
-            .collect()
-        )
-        score_by = {r["doc_id"]: float(r["score_r"]) for r in fb_rows}
+        score_by = self._feedback_scores(query, fb_docs)
         z = sum(score_by.values())
         if not score_by or z <= 0:
             return spark.createDataFrame([(0, 0, None)], schema)
@@ -587,13 +574,7 @@ class QueryEngine:
                 pwq[t] = pwq.get(t, 0.0) + w_d * (f / dl)
         if not pwq:
             return spark.createDataFrame([(len(score_by), 0, None)], schema)
-        cfs = {
-            r["term"]: float(r["cf"])
-            for r in self._blocks_for(sorted(pwq))
-            .groupBy("term")
-            .agg(F.sum("sum_tf").alias("cf"))
-            .collect()
-        }  # bounded by the fb vocabulary (fb_docs * doc_len)
+        cfs = term_cfs(self.index, sorted(pwq))  # the fb vocabulary
         c_tokens = float(self.index.meta["total_tokens"])
         clarity = 0.0
         for t in sorted(pwq):
@@ -612,15 +593,14 @@ class QueryEngine:
         shape that avoids OFFSET's scan-and-discard. Same single term-IN
         scan as ``bm25_scores``; the cursor predicate prunes before the
         TakeOrdered."""
+        _check_k(k)
         d, s = int(after[0]), float(after[1])
-        return (
-            self.bm25_scores(query)
-            .filter(
+        return top_k(
+            self.bm25_scores(query).filter(
                 (F.col("score") < s)
                 | ((F.col("score") == s) & (F.col("doc_id") > d))
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            ),
+            k,
         )
 
     def bm25_topk_decayed(
@@ -643,6 +623,7 @@ class QueryEngine:
         import datetime as _dt
         import math
 
+        _check_k(k)
         lam = math.log(2.0) / (float(half_life_days) * 86400.0)
         meta = self.index.docs.select(
             "doc_id", F.col(ts_col).cast("double").alias("_ts")
@@ -655,12 +636,11 @@ class QueryEngine:
             now_dt = now_dt.replace(tzinfo=_dt.timezone.utc)
         now_epoch = now_dt.timestamp()
         decay = F.exp(F.lit(-lam) * (F.lit(float(now_epoch)) - F.col("_ts")))
-        return (
+        return top_k(
             self.bm25_scores(query)
             .join(meta, "doc_id")
-            .select("doc_id", (F.col("score") * decay).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            .select("doc_id", (F.col("score") * decay).alias("score")),
+            k,
         )
 
     def match_latest(
@@ -697,26 +677,21 @@ class QueryEngine:
         """
         from tsidx.tokenize import term_freqs
 
+        _check_k(k)
         src = (
             self.index.docs.filter(F.col("doc_id") == doc_id)
             .select("text")
             .collect()
         )
-        spark = self.index.docs.sparkSession
         if not src:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return _empty_scores(self.index.docs.sparkSession)
         tfs, _dl = term_freqs(src[0]["text"], self._stem_cache)
         idfs = self.query_idfs(sorted(tfs))
         ranked = sorted(
             ((t, tfs[t] * idfs[t]) for t in idfs), key=lambda x: (-x[1], x[0])
         )
         sel = [t for t, _ in ranked[: int(m)]]
-        return (
-            self._bm25_scores_terms(sel)
-            .filter(F.col("doc_id") != doc_id)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return top_k(self._bm25_scores_terms(sel).filter(F.col("doc_id") != doc_id), k)
 
     def bm25_scores_batch(
         self, queries: dict[str, str | list[str]]
@@ -754,17 +729,10 @@ class QueryEngine:
             "query_id string, term string, idf double",
         )
         rows = self._live(self.posting_rows(sorted(idfs)))
-        return (
-            rows.join(F.broadcast(fan), "term")
-            .withColumn("contrib", F.col("idf") * bm25_wtf(self.index.meta))
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
+        return sum_contribs(
+            rows.join(F.broadcast(fan), "term"),
+            F.col("idf") * bm25_wtf(self.index.meta),
+            keys=("query_id", "doc_id"),
         )
 
     def bm25_topk_batch(
@@ -780,23 +748,11 @@ class QueryEngine:
         trip of the full score set. ``k == 0`` is an empty page and
         ``k < 0`` an error, as in :func:`tsidx.wand.wand_topk`.
         """
-        from pyspark.sql import Window
-
-        if k < 0:
-            raise ValueError(f"k must be >= 0, got {k}")
-        if k == 0:
+        if _check_k(k) == 0:
             return self.index.docs.sparkSession.createDataFrame(
                 [], "query_id string, doc_id long, score double"
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            self.bm25_scores_batch(queries)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= int(k))
-            .drop("rn")
-        )
+        return top_k_per(self.bm25_scores_batch(queries), "query_id", int(k))
 
     def match_prefix(self, prefix: str) -> DataFrame:
         """Docs containing any term with the given (stem-space) prefix —
@@ -829,13 +785,9 @@ class QueryEngine:
         Scoring still reads only the query terms' posting blocks, so the
         filter never widens the scored set — it only shrinks it.
         """
+        _check_k(k)
         keep = self.index.docs.filter(predicate).select("doc_id")
-        return (
-            self.bm25_scores(query)
-            .join(keep, "doc_id", "semi")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return top_k(self.bm25_scores(query).join(keep, "doc_id", "semi"), k)
 
     def suggest_terms(self, token: str, max_dist: int = 1) -> DataFrame:
         """(term, df, dist): dictionary terms within *max_dist* edits of the
@@ -1021,18 +973,21 @@ class QueryEngine:
     def _match_term_list(self, terms: list[str]) -> DataFrame:
         """Posting scan + pinned union for an explicit expansion set (the
         second half of every dictionary-expansion match plan)."""
-        spark = self.index.docs.sparkSession
         hits = (
             self.posting_doc_ids(self._blocks_for(terms))
             .select("doc_id")
             .distinct()
         )
         if self.index.pinned:
-            pinned = spark.createDataFrame(
-                [(d,) for d in sorted(self.index.pinned)], "doc_id long"
-            )
-            hits = hits.unionByName(pinned).distinct()
+            hits = hits.unionByName(self._pinned_df()).distinct()
         return self._live(hits).orderBy("doc_id")
+
+    def _pinned_df(self) -> DataFrame:
+        """The index's pinned doc_ids (reference ``Index.pin``) as a
+        one-column ``doc_id`` frame."""
+        return self.index.docs.sparkSession.createDataFrame(
+            [(d,) for d in sorted(self.index.pinned)], "doc_id long"
+        )
 
     def bm25_training_pairs(
         self, query: str | list[str], k_pos: int, k_neg: int
@@ -1061,17 +1016,11 @@ class QueryEngine:
             .agg(F.count_distinct("term").alias("nt"))
         )
         scored = self.bm25_scores(query).join(nt, "doc_id")
-        pos = (
-            scored.filter(F.col("nt") == len(terms))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k_pos))
-            .select("doc_id", F.lit(1).alias("label"), "score")
+        pos = top_k(scored.filter(F.col("nt") == len(terms)), k_pos).select(
+            "doc_id", F.lit(1).alias("label"), "score"
         )
-        neg = (
-            scored.filter(F.col("nt") < len(terms))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k_neg))
-            .select("doc_id", F.lit(0).alias("label"), "score")
+        neg = top_k(scored.filter(F.col("nt") < len(terms)), k_neg).select(
+            "doc_id", F.lit(0).alias("label"), "score"
         )
         return pos.unionByName(neg)
 
@@ -1233,19 +1182,9 @@ class QueryEngine:
         postings, and groups with no candidate never appear. Deterministic
         within groups: (-score, doc_id) ordering.
         """
-        from pyspark.sql import Window
-
         meta = self.index.docs.select("doc_id", group_col)
         scored = self.bm25_scores(query).join(meta, "doc_id")
-        w = Window.partitionBy(group_col).orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-            .select(group_col, "doc_id", "score")
-        )
+        return top_k_per(scored, group_col, k).select(group_col, "doc_id", "score")
 
     def lm_dirichlet_scores(
         self, query: str | list[str], mu: float = 2000.0
@@ -1266,54 +1205,38 @@ class QueryEngine:
         Physical shape: identical to :meth:`bm25_scores` — one pushed
         ``term IN`` posting scan + decode. ``cf`` comes from the block
         METADATA (``sum_tf`` per block, an exact integer sum maintained by
-        the build) aggregated per term and broadcast back — no window over
-        the decoded rows, so a hot term's postings are never repartitioned
-        into one task. Like Lucene, collection statistics (cf, C) count
+        the build) summed per term on the driver (:func:`tsidx.wand.term_cfs`)
+        and read through a literal term map, as idf is — no join and no
+        window over the decoded rows, so a hot term's postings are never
+        repartitioned into one task. Like Lucene, collection statistics (cf, C) count
         logically-deleted docs until compaction; per-doc sums accumulate in
         sorted-term order, so scores are deterministic and
         oracle-reproducible.
         """
-        terms = sorted(set(self.terms_of(query)))
-        spark = self.index.docs.sparkSession
-        if not terms:
-            return spark.createDataFrame([], "doc_id long, score double")
-        mu = float(mu)
+        rows, cf = self._cf_rows(query)
+        if rows is None:
+            return _empty_scores(self.index.docs.sparkSession)
         c_tokens = float(self.index.meta["total_tokens"])
-        cf_df = (
-            self._blocks_for(terms)
-            .groupBy("term")
-            .agg(F.sum("sum_tf").cast("double").alias("_cf"))
-        )
-        rows = self._live(self.posting_rows(terms)).join(
-            F.broadcast(cf_df), "term"
-        )
-        tf = F.col("tf").cast("double")
-        dl = F.col("dl").cast("double")
-        contrib = F.log(
-            F.lit(1.0) + tf / (F.lit(mu) * (F.col("_cf") / F.lit(c_tokens)))
-        ) + F.log(F.lit(mu) / (F.lit(mu) + dl))
-        return (
-            rows.withColumn("contrib", contrib)
-            .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
-        )
+        return sum_contribs(rows, lm_dirichlet_contrib(cf, float(mu), c_tokens))
 
     def lm_dirichlet_topk(
         self, query: str | list[str], k: int, mu: float = 2000.0
     ) -> DataFrame:
         """Deterministic top-k by (-score, doc_id) over
         :meth:`lm_dirichlet_scores`; executes as TakeOrdered."""
-        return (
-            self.lm_dirichlet_scores(query, mu)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
-        )
+        _check_k(k)
+        return top_k(self.lm_dirichlet_scores(query, mu), k)
+
+    def _cf_rows(self, query: str | list[str]):
+        """``(rows, cf)`` for the collection-frequency models: the query
+        terms' live posting rows and a per-row cf column read from the
+        :func:`tsidx.wand.term_cfs` literal map; ``(None, None)`` when no
+        query term is in the index."""
+        cfs = term_cfs(self.index, sorted(set(self.terms_of(query))))
+        if not cfs:
+            return None, None
+        rows = self._live(self.posting_rows(sorted(cfs)))
+        return rows, term_map(cfs)[F.col("term")]
 
     def lm_jm_scores(
         self, query: str | list[str], lam: float = 0.1
@@ -1332,53 +1255,31 @@ class QueryEngine:
 
         Physical shape: identical to :meth:`lm_dirichlet_scores` — one
         pushed ``term IN`` posting scan + decode; ``cf`` from the block
-        metadata ``sum_tf`` aggregated per term and broadcast back (no
-        repartition of decoded rows); per-doc sums accumulate in
+        metadata ``sum_tf`` summed per term on the driver and read through
+        a literal term map (no repartition of decoded rows); per-doc sums accumulate in
         sorted-term order for engine-reproducible doubles.
         """
-        terms = sorted(set(self.terms_of(query)))
-        spark = self.index.docs.sparkSession
-        if not terms:
-            return spark.createDataFrame([], "doc_id long, score double")
+        rows, cf = self._cf_rows(query)
+        if rows is None:
+            return _empty_scores(self.index.docs.sparkSession)
         lam = float(lam)
         c_tokens = float(self.index.meta["total_tokens"])
-        cf_df = (
-            self._blocks_for(terms)
-            .groupBy("term")
-            .agg(F.sum("sum_tf").cast("double").alias("_cf"))
-        )
-        rows = self._live(self.posting_rows(terms)).join(
-            F.broadcast(cf_df), "term"
-        )
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         contrib = F.log(
             F.lit(1.0)
             + (F.lit(1.0 - lam) * tf / dl)
-            / (F.lit(lam) * (F.col("_cf") / F.lit(c_tokens)))
+            / (F.lit(lam) * (cf / F.lit(c_tokens)))
         )
-        return (
-            rows.withColumn("contrib", contrib)
-            .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
-        )
+        return sum_contribs(rows, contrib)
 
     def lm_jm_topk(
         self, query: str | list[str], k: int, lam: float = 0.1
     ) -> DataFrame:
         """Deterministic top-k by (-score, doc_id) over
         :meth:`lm_jm_scores`; executes as TakeOrdered."""
-        return (
-            self.lm_jm_scores(query, lam)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
-        )
+        _check_k(k)
+        return top_k(self.lm_jm_scores(query, lam), k)
 
     def pl2_scores(self, query: str | list[str], c: float = 1.0) -> DataFrame:
         """(doc_id, score): Divergence-From-Randomness PL2 ranking
@@ -1400,53 +1301,31 @@ class QueryEngine:
         """
         import math
 
-        terms = sorted(set(self.terms_of(query)))
-        spark = self.index.docs.sparkSession
-        if not terms:
-            return spark.createDataFrame([], "doc_id long, score double")
+        rows, cf = self._cf_rows(query)
+        if rows is None:
+            return _empty_scores(self.index.docs.sparkSession)
         c = float(c)
         n_docs = float(self.index.meta["n_docs"])
         avgdl = float(self.index.meta["avgdl"])
-        cf_df = (
-            self._blocks_for(terms)
-            .groupBy("term")
-            .agg(F.sum("sum_tf").cast("double").alias("_cf"))
-        )
-        rows = self._live(self.posting_rows(terms)).join(
-            F.broadcast(cf_df), "term"
-        )
         ln2 = math.log(2.0)
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         tfn = tf * (F.log(F.lit(1.0) + F.lit(c * avgdl) / dl) / F.lit(ln2))
-        lam = F.col("_cf") / F.lit(n_docs)
+        lam = cf / F.lit(n_docs)
         contrib = (F.lit(1.0) / (tfn + F.lit(1.0))) * (
             tfn * (F.log(tfn / lam) / F.lit(ln2))
             + (lam - tfn) * F.lit(math.log2(math.e))
             + F.lit(0.5) * (F.log(F.lit(2.0 * math.pi) * tfn) / F.lit(ln2))
         )
-        return (
-            rows.withColumn("contrib", contrib)
-            .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
-        )
+        return sum_contribs(rows, contrib)
 
     def pl2_topk(
         self, query: str | list[str], k: int, c: float = 1.0
     ) -> DataFrame:
         """Deterministic top-k by (-score, doc_id) over
         :meth:`pl2_scores`; executes as TakeOrdered."""
-        return (
-            self.pl2_scores(query, c)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(int(k))
-        )
+        _check_k(k)
+        return top_k(self.pl2_scores(query, c), k)
 
     def significant_terms(
         self,

@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsidx.positions import decode_positional
+from tsidx.query import fold_sum
+from tsidx.wand import _check_k, _empty_scores, term_cfs, top_k
 
 __all__ = ["sdm_topk", "sdm_scores"]
 
@@ -127,9 +129,8 @@ def sdm_scores(
         terms = [
             t for part in query for t in stem_tokens(part, engine._stem_cache)
         ]
-    spark = engine.index.docs.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(engine.index.docs.sparkSession)
     mu = float(mu)
     c_tokens = float(engine.index.meta["total_tokens"])
     uniq = sorted(set(terms))
@@ -138,13 +139,7 @@ def sdm_scores(
     rows = engine._live(engine.posting_rows(uniq))
     rows = rows.localCheckpoint(eager=False)  # feeds cand + present rows
     cand = rows.select("doc_id", "dl").distinct()
-    cf_uni = {
-        r["term"]: float(r["cf"])
-        for r in engine._blocks_for(uniq)
-        .groupBy("term")
-        .agg(F.sum("sum_tf").alias("cf"))
-        .collect()
-    }  # |q|-bounded collect
+    cf_uni = term_cfs(engine.index, uniq)
 
     # feature table: feat_id -> (weight, cf, per-doc count DataFrame)
     feats: list[tuple[str, float, float, DataFrame]] = []
@@ -224,11 +219,7 @@ def sdm_scores(
         present = bonus if present is None else present.unionByName(bonus)
 
     per_doc_bonus = present.groupBy("doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("feat", "bonus"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["bonus"],
-        ).alias("bonus")
+        fold_sum("feat", "bonus").alias("bonus")
     )
     return (
         cand.join(per_doc_bonus, "doc_id", "left")
@@ -257,7 +248,8 @@ def sdm_topk(
 ) -> DataFrame:
     """Deterministic top-k by (-score, doc_id) over :func:`sdm_scores`;
     executes as TakeOrdered."""
-    return (
+    _check_k(k)
+    return top_k(
         sdm_scores(
             engine,
             positional,
@@ -267,7 +259,6 @@ def sdm_topk(
             lam_o=lam_o,
             lam_u=lam_u,
             window=window,
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
+        ),
+        k,
     )

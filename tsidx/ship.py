@@ -11,13 +11,15 @@ working directory.
 from __future__ import annotations
 
 import os
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
 
 __all__ = ["ensure_shipped", "package_zip"]
 
-_SESSION_FLAG = "spark.tsidx.shipped"
+_lock = threading.Lock()
+_shipped_to = None  # the SparkContext the package was last registered with
 
 
 def package_zip(dest_dir: str) -> str:
@@ -39,12 +41,16 @@ def package_zip(dest_dir: str) -> str:
 
 
 def ensure_shipped(spark: SparkSession) -> None:
-    """Idempotently register the tsidx package with the session's context."""
+    """Idempotently register the tsidx package with the session's context:
+    once per SparkContext, whichever thread asks (a Spark local property
+    would be thread-local and ship once per thread)."""
+    global _shipped_to
     sc = spark.sparkContext
-    if sc.getLocalProperty(_SESSION_FLAG) == "1":
-        return
-    import tempfile
+    with _lock:
+        if _shipped_to is sc:
+            return
+        import tempfile
 
-    zip_path = package_zip(tempfile.mkdtemp(prefix="tsidx_ship_"))
-    sc.addPyFile(zip_path)
-    sc.setLocalProperty(_SESSION_FLAG, "1")
+        zip_path = package_zip(tempfile.mkdtemp(prefix="tsidx_ship_"))
+        sc.addPyFile(zip_path)
+        _shipped_to = sc

@@ -91,26 +91,16 @@ def vsm_topk(engine, query: str | list[str], k: int,
     """
     import math
 
-    from tsidx.oracle import bm25_idf
+    from tsidx.query import term_map
     from tsidx.tokenize import query_terms
+    from tsidx.wand import _empty_scores
 
-    spark = engine.index.docs.sparkSession
-    terms = query_terms(query)
-    n = int(engine.index.meta["n_docs"])
-    rows = (
-        engine.index.terms.filter(F.col("term").isin(terms)).collect()
-        if terms
-        else []
-    )
-    idfs = {r["term"]: bm25_idf(n, r["df"]) for r in rows}
+    idfs = engine.query_idfs(query_terms(query))
     if not idfs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _empty_scores(engine.index.docs.sparkSession)
     qnorm = math.sqrt(sum(idfs[t] * idfs[t] for t in sorted(idfs)))
     # per-term scoring coefficient: q̂_t · idf_t (driver floats, |q| rows)
-    coeff = {t: (idfs[t] / qnorm) * idfs[t] for t in sorted(idfs)}
-    coeff_map = F.create_map(
-        *[F.lit(x) for t in sorted(coeff) for x in (t, coeff[t])]
-    )
+    coeff_map = term_map({t: (idfs[t] / qnorm) * idfs[t] for t in sorted(idfs)})
     if norms is None:
         norms = doc_norms(engine)
     cand = engine._live(engine.posting_rows(sorted(idfs)))

@@ -160,6 +160,35 @@ def _check_k(k: int) -> int:
     return int(k)
 
 
+def _score_order():
+    """The one result order: descending score, ties by ascending doc_id.
+    A function, not a module constant: a Column needs a live
+    SparkContext, which does not exist at import time."""
+    return F.desc("score"), F.asc("doc_id")
+
+
+def top_k(scores: DataFrame, k: int) -> DataFrame:
+    """The best *k* rows of a (doc_id, score, ...) frame in
+    (-score, doc_id) order; executes as TakeOrdered."""
+    return scores.orderBy(*_score_order()).limit(_check_k(k))
+
+
+def top_k_per(scores: DataFrame, key: str, k: int) -> DataFrame:
+    """The best *k* rows per *key* in (-score, doc_id) order (a
+    rank-limit window)."""
+    w = Window.partitionBy(key).orderBy(*_score_order())
+    return (
+        scores.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
+def _empty_scores(spark) -> DataFrame:
+    """An empty (doc_id, score) page."""
+    return spark.createDataFrame([], _SCORE_SCHEMA)
+
+
 def term_idfs(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
     """BM25 idf of each of *terms* in the index (unknown terms dropped):
     one |terms|-row collect of the terms table."""
@@ -168,6 +197,23 @@ def term_idfs(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
     n = index.meta["n_docs"]
     rows = index.terms.filter(F.col("term").isin(terms)).collect()
     return {r["term"]: bm25_idf(n, r["df"]) for r in rows}
+
+
+def term_cfs(index: InvertedIndex, terms: list[str]) -> dict[str, float]:
+    """Collection frequency (total occurrences) of each of *terms* in the
+    index (unknown terms dropped): one |terms|-row collect of the posting
+    blocks' ``sum_tf`` metadata, no decode. Like Lucene, cf counts
+    logically-deleted docs until compaction. cf is not persisted in the
+    terms table: ``term_idfs`` reads that table on every ranker call."""
+    if not terms:
+        return {}
+    rows = (
+        index.postings.filter(F.col("term").isin(terms))
+        .groupBy("term")
+        .agg(F.sum("sum_tf").alias("cf"))
+        .collect()
+    )
+    return {r["term"]: float(r["cf"]) for r in rows}
 
 
 def _scoring_params(index: InvertedIndex) -> tuple[float, float, float, int]:
@@ -186,19 +232,14 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int) -> DataFrame
     spark = index.docs.sparkSession
     k = _check_k(k)
     if k == 0:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return _empty_scores(spark)
     ensure_shipped(spark)
     idfs = term_idfs(index, query_terms(query))
     if not idfs:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return _empty_scores(spark)
     cand = _with_dead(index.postings.filter(F.col("term").isin(sorted(idfs))), index)
     scorer = _make_group_scorer(idfs, k, *_scoring_params(index))
-    return (
-        cand.groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return top_k(cand.groupBy("block_id").applyInPandas(scorer, schema=_SCORE_SCHEMA), k)
 
 
 #: ``tsidx.wand.maxscore_topk`` — the same ranker under its MaxScore name
@@ -247,12 +288,10 @@ def wand_topk_batch(
         "query_id string, term string",
     )
     scorer = _make_batch_group_scorer(idfs_by_query, k, *_scoring_params(index))
-    w_q = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
+    return top_k_per(
         cand.join(F.broadcast(fan), "term")
         .groupBy("query_id", "block_id")
-        .applyInPandas(scorer, schema=_BATCH_SCORE_SCHEMA)
-        .withColumn("rn", F.row_number().over(w_q))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+        .applyInPandas(scorer, schema=_BATCH_SCORE_SCHEMA),
+        "query_id",
+        k,
     )
